@@ -285,7 +285,6 @@ def band_candidate_pairs(
     seed: int = 42,
     hash_family: str = "xxhash64",
     band_split: int | None = None,
-    witness: dict | None = None,
 ) -> DataFrame:
     """Distinct (id_a, id_b) candidate pairs from classic LSH banding over
     hashed shingle sets ``sh`` (columns: id, ``shingles`` array<long>) —
@@ -297,7 +296,7 @@ def band_candidate_pairs(
     needs; the string form is what the DuckDB dual's ``string_agg``
     reproduces).
 
-    SKEW (r13, r12 verdict #4/#5): nothing in the data bounds a
+    SKEW: nothing in the data bounds a
     (band_idx, band_sig) bucket — a cluster of m near-identical docs
     shares every band signature, and the naive self-join puts all
     m·(m−1)/2 candidate pairs of each of its ``bands`` buckets on ONE
@@ -320,14 +319,14 @@ def band_candidate_pairs(
     split needs the bucket sizes, and counting (band_idx, band_sig)
     groups costs an extra band-rows-grain aggregation + tag join that
     the plain path simply does not have — measured 2.06 s → 4.74 s
-    (≈2.3×) on the sf0.1 banded-pairs chain in the r13 interleaved A/B,
-    pure overhead when no bucket exceeds the split (the witness measured
-    max bucket = tens at bench SFs). At corpus scale, where one
-    boilerplate/duplicate cluster can own millions of rows of one band
-    key, the extra pass is the insurance premium that keeps the job's
-    tail bounded — enable it there (the r12-verdict failure mode it
-    guards against is a single unsplittable join key, which no conf can
-    fix after the fact)."""
+    (≈2.3×) on the sf0.1 banded-pairs chain in an interleaved same-JVM
+    A/B, pure overhead when no bucket exceeds the split (the largest
+    bucket at sf0.01 and sf0.1 holds 3 and 4 rows). At corpus scale,
+    where one boilerplate/duplicate cluster can own millions of rows of
+    one band key, the extra pass is the insurance premium that keeps the
+    job's tail bounded — enable it there (the failure mode it guards
+    against is a single unsplittable join key, which no conf can fix
+    after the fact)."""
     r = num_hashes // bands
     if bands * r != num_hashes:
         raise ValueError("num_hashes must be divisible by bands")
@@ -351,17 +350,6 @@ def band_candidate_pairs(
         F.col(id_col),
         F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
     )
-    if witness is not None:
-        # measurement hook (r13): bucket-size distribution of the REAL
-        # executed frame, so scripts/work_witness.py can report the
-        # per-bucket candidate bound (m·(m−1)/2 naive on one key vs
-        # m × band_split per key chunked).
-        witness.update(
-            band_rows=band_rows,
-            band_bucket_n=band_rows.groupBy("band_idx", "band_sig").agg(
-                F.count(F.lit(1)).alias("_bn")
-            ),
-        )
     if band_split is None:
         return (
             band_rows.alias("a")
@@ -432,7 +420,6 @@ def containment_banded_pairs(
     max_bucket: int = 64,
     containment_threshold: float = 0.8,
     hash_family: str = "xxhash64",
-    witness: dict | None = None,
 ) -> DataFrame:
     """ASYMMETRIC containment dedup at corpus scale — the executed 100 TB
     path that replaces the exact entry's ``doc_id < cap`` bound
@@ -502,14 +489,6 @@ def containment_banded_pairs(
         .distinct()
     )
     cand = cand_band.unionByName(cand_bk).distinct()
-    if witness is not None:
-        # measurement hook (r12, VERDICT #1): hand the REAL intermediate
-        # frames to the work-metric witness (scripts/work_witness.py) so
-        # candidate-growth linearity is measured on the executed plan,
-        # not a re-derivation that could drift. No effect when None.
-        witness.update(
-            sh=sh, cand_band=cand_band, posts=posts, cand_bk=cand_bk, cand=cand
-        )
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

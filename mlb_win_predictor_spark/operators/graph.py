@@ -35,7 +35,6 @@ def pagerank(
     damping: float = 0.85,
     tol: float | None = None,
     checkpoint_every: int = 1,
-    witness: dict | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list ``(src, dst)``.
 
@@ -44,21 +43,21 @@ def pagerank(
     aggregation order (~1e-15 per step).
 
     Everything that does not change across iterations is computed ONCE,
-    outside the loop (r7: 17.3s → see docstring of the catalog entry):
+    outside the loop:
 
     - ``links`` = distinct edges + out-degree, hash-partitioned by
       ``src`` and persisted — so the per-iteration join re-shuffles only
       the rank vector (one row per node), never the edge table. At 100 TB
       the edge table is the big side; shuffling it once instead of once
       per iteration is the difference between O(E) and O(E × iters)
-      network traffic. r8: the links build itself is ONE edge shuffle —
+      network traffic. The links build itself is ONE edge shuffle —
       ``repartition("src")`` first, then ``dropDuplicates(src, dst)``
       and a window ``count over (partition by src)`` for the degree,
       both of which Catalyst satisfies WITHOUT further exchange because
       hash(src) already clusters every (src, dst) group and every src
-      partition (the r7 shape paid three edge-table shuffles: distinct
-      on (src, dst), the degree groupBy, and the repartition after the
-      degree join — measured 9.5s → ~5s on the co-purchase entry).
+      partition (a distinct on (src, dst), a degree groupBy and a
+      repartition after the degree join pay three edge-table shuffles —
+      measured 9.5s vs ~5s on the co-purchase entry).
     - the DANGLING NODE SET is static (a node either has out-edges or it
       doesn't); deriving it per-iteration via a left join against the
       degree table (the old shape) paid an extra rank-vector join every
@@ -70,14 +69,14 @@ def pagerank(
     iteration's checkpoint explicitly unpersisted (bounds storage to one
     rank-vector copy regardless of iteration count).
 
-    CONVERGENCE EARLY-EXIT (r8, made near-free r9): with ``tol`` set,
+    CONVERGENCE EARLY-EXIT: with ``tol`` set,
     iteration stops when ``max|rank_t − rank_{t−1}| < tol``. The delta
     rides INSIDE the rank update: the previous checkpoint joins into the
     new rank plan before materialization (same hash(node) partitioning —
     no extra exchange), so the probe is one tiny ``max(_delta)`` agg
-    over the freshly materialized checkpoint blocks. The r8 shape ran a
-    separate join+agg job per iteration instead, which cost MORE than
-    the fixed iterations it was meant to save (measured +0.85s/iter on
+    over the freshly materialized checkpoint blocks. A separate
+    join+agg job per iteration would cost MORE than the fixed
+    iterations it is meant to save (measured +0.85s/iter on
     the sf0.1 co-purchase graph). ``tol=None`` (default) preserves the
     exact fixed-``iterations`` contract the numpy power-iteration oracle
     pins to 1e-9; ``iterations`` is then the CAP. Measured co-purchase
@@ -85,12 +84,12 @@ def pagerank(
     4.2e-8, 5.5e-9 — geometric ~7.1× per step, so a tol at the output
     rounding quantum (1e-9) fires just past the 5-iteration cap; graphs
     that DO converge early stop paying scheduler latency, and the probe
-    is cheap enough to leave on. r11: the probe is STRICT per-step even
+    is cheap enough to leave on. The probe is STRICT per-step even
     with ``checkpoint_every > 1`` — tol callers pay one extra
     checkpoint per chain to pin the state one step before the chain's
     end (see the loop comment); tol=None callers are untouched.
 
-    SKEW (the 100 TB question, r7 verdict): the per-iteration
+    SKEW: the per-iteration
     ``groupBy("dst")`` on a power-law graph concentrates a hot node's
     in-edges on one reducer ONLY in name — Catalyst plans a partial
     (map-side) aggregation, so each map partition emits at most one
@@ -128,12 +127,6 @@ def pagerank(
         links.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
     ).persist()
     has_dangling = dangling_nodes.count() > 0
-    if witness is not None:
-        # measurement hook (r12, VERDICT #1): per-step work is exactly
-        # one rank⋈links join (|links| contrib rows pre-agg) + one
-        # groupBy over |nodes| — expose the REAL persisted frames so
-        # scripts/work_witness.py records the executed plan's volumes.
-        witness.update(links=links, nodes=nodes, dangling=dangling_nodes)
 
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
 
@@ -150,9 +143,10 @@ def pagerank(
             # damping·0.0/n ≡ +0.0 and x + 0.0 is exact for the positive
             # base term — so the 1-row crossJoin the general path pays is
             # a per-step Range scan + BroadcastExchange +
-            # BroadcastNestedLoopJoin that computes nothing (r13, guide
-            # §2.4 "remove shuffles/work outright"; bit-identical ranks
-            # asserted in the r13 A/B and the numpy oracle).
+            # BroadcastNestedLoopJoin that computes nothing. Ranks are
+            # bit-identical to the general path (the numpy oracle pins
+            # the values; test_pagerank_no_dangling_skips_mass_crossjoin
+            # pins the plan).
             return updated.select(
                 "node",
                 (
@@ -182,17 +176,17 @@ def pagerank(
     done = 0
     while done < iterations:
         # ``checkpoint_every`` chains this many update steps into ONE
-        # materialization job (r9: identical ranks, ~5% wall at sf0.1 —
+        # materialization job (identical ranks, ~5% wall at sf0.1 —
         # half the scheduler/checkpoint round-trips; lineage depth stays
         # bounded at ``checkpoint_every`` steps).
         steps = min(max(checkpoint_every, 1), iterations - done)
         if tol is not None and steps > 1:
-            # STRICT per-step probe (r11, r10 verdict #7): with chaining,
+            # STRICT per-step probe: with chaining,
             # comparing ranks ``checkpoint_every`` steps apart was
             # conservative only for monotone convergence — an
             # oscillatory mode (eigenvalue near −damping) cancels across
             # 2 steps, reading ~6-7× tighter than the true per-step
-            # delta at damping 0.85 (ADVICE r9). So when a tolerance is
+            # delta at damping 0.85. So when a tolerance is
             # actually in force, materialize the chain MINUS its final
             # step, then run the final step with the delta piggybacked
             # against that checkpoint: the probe now measures a true
@@ -202,7 +196,7 @@ def pagerank(
             # entry pins) keeps the single-job chain and its measured
             # wall win. Carrying the pre-final-step ranks through the
             # plan instead would duplicate the chain subtree (Spark 4
-            # AQE does not stage-reuse it — PLANS.md r10), i.e. ~2× the
+            # AQE does not stage-reuse it — PLANS.md), i.e. ~2× the
             # chain's work; the extra checkpoint is strictly cheaper.
             mid = ranks
             for _ in range(steps - 1):
@@ -222,12 +216,12 @@ def pagerank(
                 new_ranks = step(new_ranks)
             track_delta = tol is not None and prev_ck is not None
         if track_delta:
-            # PIGGYBACKED delta (r9): the previous checkpoint carries the
+            # PIGGYBACKED delta: the previous checkpoint carries the
             # same hash(node) partitioning as the update's agg output, so
             # this join folds into the checkpoint-materialization job
             # with no extra exchange — a separate post-hoc delta join
-            # (the r8 shape) cost a full join+agg JOB per iteration,
-            # measured +3.4s on the 5-iteration co-purchase entry.
+            # costs a full join+agg JOB per iteration, measured +3.4s on
+            # the 5-iteration co-purchase entry.
             new_ranks = new_ranks.join(
                 prev_ck.select("node", F.col("rank").alias("_prev")), "node", "left"
             ).select(
@@ -237,13 +231,6 @@ def pagerank(
                     F.col("rank") - F.coalesce(F.col("_prev"), F.lit(0.0))
                 ).alias("_delta"),
             )
-        if witness is not None and "first_chain" not in witness:
-            # measurement hook (r13): the loop body's real pre-checkpoint
-            # plan — explain() on the returned frame truncates at the
-            # checkpoint boundary, so this is the only way to plan-verify
-            # per-step claims (exchange count, join strategy) off the
-            # executed code rather than a hand-mirrored copy.
-            witness["first_chain"] = new_ranks
         ck = new_ranks.localCheckpoint(eager=True)
         converged = False
         if track_delta:

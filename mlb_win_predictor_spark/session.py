@@ -64,8 +64,11 @@ def get_spark(
     app_name: str = "mlb-win-predictor-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local session tuned for the test harness."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) a local session tuned for the test harness.
+
+    Runs on ``local[$SPARK_GRAFT_CPUS]``, defaulting to the cores this
+    process may use (a fixed larger default oversubscribes small hosts)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus != "*" else 32
     spark = (

@@ -25,7 +25,7 @@ def main() -> None:
     # r11 (r10 verdict #6): the artifact carries BOTH the sf0.1 frontier
     # (whose recalls the RUN_SLOW test reproduces — its json block stays
     # FIRST) and the sf1 frontier over the sharded 10x corpus, so the
-    # recall/latency trade is witnessed at two data scales.
+    # recall/latency trade is measured at two data scales.
     sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.bench/sf1")
     spark = get_spark(app_name="ann-frontier")
 

@@ -11,29 +11,7 @@ echo "== oracle parity at driver scale (sf0.01) =="
 PARITY_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 
 echo "== driver simulation (default session, foreign cwd) =="
-(cd /tmp && python - <<'EOF'
-import sys
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-spark = SparkSession.builder.master("local[8]").getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
-import __spark_entry__ as se
-from tests.oracle import compare, duckdb_connection
-con = duckdb_connection("/root/testdata/sf0.01")
-qs, osql = se.queries(), se.oracle_sql()
-fails = []
-for name in sorted(qs):
-    try:
-        if name in osql:
-            compare(qs[name](spark, "/root/testdata/sf0.01"), con, osql[name])
-        else:
-            assert qs[name](spark, "/root/testdata/sf0.01").count() >= 0
-    except Exception as ex:
-        fails.append((name, str(ex)[:150]))
-print(f"driver-sim: entry={se.entry(spark).count()} total={len(qs)} oracle={len(osql)} failures={len(fails)}")
-assert not fails, fails
-EOF
-)
+python scripts/driver_sim.py
 
 echo "== bench (sf0.1) =="
 python bench.py

@@ -16,29 +16,7 @@ msg="${1:?usage: scripts/gate_commit.sh \"commit message\"}"
 py_out=$(python -m pytest tests/ -q 2>&1 | tail -1)
 echo "pytest: ${py_out}"
 
-sim_out=$(cd /tmp && python - <<'EOF'
-import sys
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-spark = SparkSession.builder.master("local[8]").getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
-import __spark_entry__ as se
-from tests.oracle import compare, duckdb_connection
-con = duckdb_connection("/root/testdata/sf0.01")
-qs, osql = se.queries(), se.oracle_sql()
-fails = []
-for name in sorted(qs):
-    try:
-        if name in osql:
-            compare(qs[name](spark, "/root/testdata/sf0.01"), con, osql[name])
-        else:
-            assert qs[name](spark, "/root/testdata/sf0.01").count() >= 0
-    except Exception as ex:
-        fails.append((name, str(ex)[:120]))
-print(f"driver-sim: entry={se.entry(spark).count()} total={len(qs)} oracle={len(osql)} failures={len(fails)}")
-assert not fails, fails
-EOF
-)
+sim_out=$(python scripts/driver_sim.py)
 sim_line=$(echo "$sim_out" | grep "driver-sim:")
 echo "${sim_line}"
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -20,6 +21,36 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def executed_plans(spark, fn) -> list[tuple[str, str]]:
+    """Run ``fn`` and return ``(description, physical plan)`` for every
+    SQL execution it triggered, oldest first — read from Spark's own SQL
+    status store, so internal eager jobs (``localCheckpoint``, the
+    ``count`` that materializes a persist) are visible where
+    ``explain()`` on a returned frame stops at the checkpoint boundary.
+
+    Executions are selected by id, not by ``executionsCount()``: the
+    store keeps only ``spark.sql.ui.retainedExecutions`` entries, so the
+    count stops growing in a long session. The listener bus is drained
+    before and after so the store has recorded every execution (and its
+    final adaptive plan). JVM-private accessors, pinned by
+    ``test_private_storage_api_smoke``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    seen = store.executionsList()
+    last_id = seen.last().executionId() if seen.nonEmpty() else -1
+    fn()
+    bus.waitUntilEmpty()
+    newest_first = []
+    it = store.executionsList().reverseIterator()
+    while it.hasNext():
+        ex = it.next()
+        if ex.executionId() <= last_id:
+            break
+        newest_first.append((ex.description(), ex.physicalPlanDescription()))
+    return newest_first[::-1]
 
 
 @pytest.fixture(scope="module")
@@ -219,8 +250,6 @@ def test_dsir_budget_selection_no_single_partition_sort(plans):
     exchange DOES legitimately appear — the weights' 1-row totals
     aggregate — so the pin is on the Window nodes' partition spec, not
     a blanket exchange scan.)"""
-    import re
-
     p = plans["dsir_budget_selection"]
     assert_single_execution_dense_index(p, "_neg")
     lines = p.splitlines()
@@ -317,8 +346,6 @@ def _exchange_arguments(p: str) -> list[str]:
     """Arguments line of every non-broadcast Exchange node in a
     ``formatted`` plan (the tree section prints ``+- Exchange (6)``; the
     partitioning lives on the detail section's ``Arguments:`` line)."""
-    import re
-
     out = []
     lines = p.splitlines()
     for i, line in enumerate(lines):
@@ -541,7 +568,6 @@ def test_new_entry_plan_shapes(plans):
     """Round-3 additions hold their documented plan shapes. Node counts
     use the formatted-explain DETAIL headers ("(N) Exchange") so each
     physical node counts once (the tree section repeats them)."""
-    import re
 
     def n_hash_exchanges(p):
         return len(re.findall(r"\(\d+\) Exchange\b", p))
@@ -642,8 +668,6 @@ def test_decontaminate_bloom_single_arrow_probe_node(plans):
     Pin the shape so a Spark upgrade or a refactor that drops the flag
     (or rejects the non-deterministic UDF) is caught here, not in a
     bench regression."""
-    import re
-
     p = plans["decontaminate_bloom"]
     nodes = re.findall(r"\(\d+\) ArrowEvalPython", p)
     assert len(nodes) == 1, (
@@ -661,117 +685,101 @@ def test_zipf_rank_no_single_partition_window(plans):
 
 
 def test_pagerank_iteration_exchanges_rank_vector_only(spark):
-    """SCALE.md's PageRank claim, pinned: the per-iteration contribution
-    join re-shuffles ONLY the rank vector — the links table (edges
-    pre-joined with out-degree, repartition("src"), persisted) scans as
-    an InMemoryTableScan whose HashPartitioning(src) already satisfies
-    the join distribution, so the edge side has NO Exchange above the
-    cached scan. This is the O(E) vs O(E × iterations) network claim at
-    cluster scale. Mirrors the loop body of operators/graph.py::pagerank
-    (the loop itself returns a materialized checkpoint, so the invariant
-    must be pinned on the constituent plan)."""
-    from pyspark.sql import functions as F
+    """SCALE.md's PageRank claim, pinned on the operator's own executed
+    plans: the links table (edges deduplicated, pre-joined with
+    out-degree, repartition("src"), persisted) is built with ONE edge
+    shuffle, and the per-iteration contribution join never moves a
+    links row — the cached scan's HashPartitioning(src) already
+    satisfies the join distribution, so no Exchange sits above it. This
+    is the O(E) vs O(E × iterations) network claim at cluster scale.
 
-    from mlb_win_predictor_spark.session import load_table
+    The build is the operator's first ``count`` execution (the one that
+    materializes the persist); the loop body is its ``localCheckpoint``
+    execution, which ``explain()`` on the returned frame cannot show.
+    Broadcast joins are disabled so the tiny test graph plans the join
+    the way a cluster-scale edge table does."""
+    from mlb_win_predictor_spark.operators.graph import pagerank
 
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey").limit(500)
-    a, b = li.alias("a"), li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-    ).select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-    # r8: the links BUILD is pinned to one edge shuffle — repartition
-    # ("src") first, then dropDuplicates + window degree, both satisfied
-    # by hash(src) with no further Exchange.
-    import contextlib
-    import io
-
-    from pyspark.sql.window import Window as PRW
-
-    def build_links(e):
-        return (
-            e.select("src", "dst")
-            .repartition("src")
-            .dropDuplicates(["src", "dst"])
-            .withColumn("deg", F.count(F.lit(1)).over(PRW.partitionBy("src")))
-        )
-
-    # count the build's own exchanges on a local-relation edge list (the
-    # parquet `edges` above adds input-side limit/broadcast exchanges
-    # that belong to the test fixture, not the build)
-    synth = spark.createDataFrame(
+    # a local-relation edge list: the input adds no exchange of its own,
+    # so every Exchange in the build execution belongs to the operator
+    edges = spark.createDataFrame(
         [(i % 7, (i * 3) % 7) for i in range(40)], "src long, dst long"
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        build_links(synth).explain("formatted")
-    build = buf.getvalue()
-    n_build_exchanges = sum(
-        1
-        for line in build.splitlines()
-        if line.strip().startswith("(") and "Exchange" in line
-    )
-    assert n_build_exchanges == 1, f"links build must be ONE edge shuffle:\n{build}"
-    links = build_links(edges).persist()
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        links.count()
-        nodes = edges.select(F.col("src").alias("node")).distinct()
-        ranks = nodes.select("node", F.lit(0.5).alias("rank"))
-        contribs = (
-            ranks.join(links, ranks["node"] == links["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        ex = executed_plans(
+            spark,
+            lambda: pagerank(edges, iterations=2, tol=None, checkpoint_every=2),
         )
-        p = plan_of(contribs)
-        assert "InMemoryTableScan" in p, p
-        # the links (cached) side must flow into the join with no Exchange:
-        # every Exchange in the plan belongs to the ranks side or the final
-        # dst aggregation, never directly above the InMemoryTableScan.
-        lines = p.splitlines()
-        scan_op = next(
-            l.split(")")[0].split("(")[1] for l in lines if "InMemoryTableScan" in l and "(" in l
-        )
-        # formatted-plan detail section: find the operator feeding each
-        # Exchange; none may be the cached scan
-        for i, l in enumerate(lines):
-            if "Exchange" in l and "Input [" not in l and "(" in l:
-                nxt = lines[i + 1] if i + 1 < len(lines) else ""
-                assert f"InMemoryTableScan ({scan_op})" not in nxt, (
-                    "links side re-shuffled:\n" + p
-                )
     finally:
-        links.unpersist()
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    kinds = [d.split(" ")[0] for d, _ in ex]
+    assert kinds == ["count"] * 3 + ["localCheckpoint"], kinds
+    build, loop = ex[0][1], ex[-1][1]
+
+    # the build's hash shuffles, deduplicated across the initial and
+    # final adaptive plans (the count's own SinglePartition aside)
+    shuffles = {
+        re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", args.strip())
+        for args in _exchange_arguments(build)
+        if "hashpartitioning(" in args
+    }
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert shuffles == {f"Arguments: hashpartitioning(src, {n}), REPARTITION_BY_COL"}, (
+        f"links build must be ONE edge shuffle, got {shuffles}:\n{build}"
+    )
+
+    # the contribution join is a shuffle join over the cached links, and
+    # no Exchange of any kind carries links rows (src, dst, deg)
+    assert "InMemoryTableScan" in loop, loop
+    assert re.search(r"(SortMergeJoin|ShuffledHashJoin) Inner", loop), loop
+    moved = re.findall(
+        r"^\(\d+\) (?:Broadcast)?Exchange\nInput \[\d+\]: \[(.*)\]$", loop, re.M
+    )
+    assert moved, "no Exchange detail entries parsed:\n" + loop
+    for inp in moved:
+        cols = set(re.findall(r"(\w+)#\d+", inp))
+        assert not {"src", "dst", "deg"} <= cols, (
+            f"links side re-shuffled ({inp}):\n{loop}"
+        )
 
 
 def test_pagerank_no_dangling_skips_mass_crossjoin(spark):
-    """r13: when the graph has NO dangling nodes the per-step dangling
-    mass is the constant +0.0, so the loop body must NOT plan the 1-row
+    """When the graph has NO dangling nodes the per-step dangling mass
+    is the constant +0.0, so the loop body must NOT plan the 1-row
     crossJoin (Range scan + BroadcastExchange + BroadcastNestedLoopJoin
-    per step that computes nothing). Pinned off the operator's REAL
-    pre-checkpoint chain via the `first_chain` witness key — the r13
-    loop-body plan dumps (plans/r13/pagerank_copurchase_loop_body_*)
-    are this invariant at the entry's scale. A graph WITH a dangling
-    node must keep the mass crossJoin (values pinned by the numpy
-    oracle test either way)."""
+    per step that computes nothing). The plan is the operator's executed
+    ``localCheckpoint`` of its first chain, read from Spark's SQL status
+    store (the returned frame's ``explain()`` stops at the checkpoint).
+    The loop-body plan dumps under plans/r13/ show the same invariant at
+    the catalog entry's scale. A graph WITH a dangling node must keep
+    the mass crossJoin (values pinned by the numpy oracle test either
+    way)."""
     from mlb_win_predictor_spark.operators.graph import pagerank
+
+    def loop_body(edges) -> str:
+        ex = executed_plans(
+            spark,
+            lambda: pagerank(edges, iterations=2, tol=None, checkpoint_every=2),
+        )
+        chains = [p for d, p in ex if d.startswith("localCheckpoint")]
+        assert len(chains) == 1, [d for d, _ in ex]
+        return chains[0]
 
     # symmetric (no dangling): every node has an out-edge
     sym = spark.createDataFrame(
         [(0, 1), (1, 0), (1, 2), (2, 1)], "src long, dst long"
     )
-    w: dict = {}
-    pagerank(sym, iterations=2, tol=None, checkpoint_every=2, witness=w)
-    p = plan_of(w["first_chain"])
+    p = loop_body(sym)
     assert "BroadcastNestedLoopJoin" not in p, (
         "no-dangling loop body must not crossJoin a constant mass:\n" + p
     )
 
     # dangling node 3 (no out-edge): the mass term is real and must stay
     dang = spark.createDataFrame([(0, 1), (1, 0), (1, 3)], "src long, dst long")
-    w2: dict = {}
-    pagerank(dang, iterations=2, tol=None, checkpoint_every=2, witness=w2)
-    p2 = plan_of(w2["first_chain"])
+    p2 = loop_body(dang)
     assert "BroadcastNestedLoopJoin" in p2, (
         "dangling-mass crossJoin missing from the dangling-graph loop body:\n" + p2
     )
@@ -786,7 +794,13 @@ def test_private_storage_api_smoke(spark):
     swallows failures BY DESIGN (an iteration must not die on a hygiene
     call), so without this test a Spark upgrade that moves the accessor
     would silently revert every iterative operator to GC-paced
-    reclamation — here the count assertion makes that failure loud."""
+    reclamation — here the count assertion makes that failure loud.
+
+    Also pins the SQL status-store accessor ``executed_plans`` reads
+    (``sharedState().statusStore().executionsList()`` plus the listener
+    bus drain): a trivial action must show up as one new execution with
+    a non-empty plan, so a Spark upgrade that moves it fails here rather
+    than as a confusing plan mismatch in the PageRank pins."""
     from pyspark.sql import functions as SF
 
     from mlb_win_predictor_spark.session import (
@@ -816,6 +830,12 @@ def test_private_storage_api_smoke(spark):
     assert release_caches(spark) >= 1
     assert persistent_rdd_count(spark) == 0
 
+    ex = executed_plans(spark, lambda: spark.range(5).count())
+    assert len(ex) == 1 and ex[0][0].startswith("count"), (
+        f"SQL status store no longer records executions: {ex}"
+    )
+    assert "Range" in ex[0][1], "executed plan text missing: " + ex[0][1]
+
 
 def test_llm_pipeline_dsir_plan_shape(plans):
     """Capstone v3: every window keyed (dedup by text, budget by
@@ -824,8 +844,6 @@ def test_llm_pipeline_dsir_plan_shape(plans):
     bucket model and 1-row totals reach the weights branch as
     broadcasts; no cartesian (the only nested-loop join allowed is the
     1-row broadcast totals cross)."""
-    import re
-
     p = plans["llm_dataset_pipeline_dsir"]
     lines = p.splitlines()
     n_windows = 0
