@@ -1,14 +1,25 @@
 """Multimodal columns (SURVEY §2.10): opaque binary payloads + typed
-metadata, with Arrow-batched decode/feature-extract plumbing.
+metadata, decoded and featurized by real codecs over Arrow batches.
 
 Design: media travels as a ``binary`` column beside a metadata struct
-(mime, n_bytes, digest). Decode / resize / frame-sample run as
-``mapInPandas`` batch iterators — Arrow transfer, bounded batch memory,
-schema declared up front — exactly the shape a real image/audio pipeline
-needs on a cluster. The actual codecs are NOT in this container, so the
-decoder body is a clearly-marked deterministic stub (per the driver
-brief): the Spark-side plumbing (schema, partitioning, UDF signature,
-batch shape) is real and tested.
+(mime, n_bytes, digest). Every codec runs as a ``mapInPandas`` batch
+iterator — Arrow transfer, bounded batch memory, schema declared up
+front, map-only with no shuffle. The codecs are pure Python + numpy
+over the stdlib ``zlib``, with no external codec libraries:
+
+- ``sniff_media`` — magic-byte format detection and header metadata;
+- ``decode_png_media`` / ``resize_png_media`` — full PNG decode (every
+  color type and bit depth, Adam7) and nearest-neighbor resize that
+  re-encodes real PNG bytes;
+- ``decode_wav_media`` / ``audio_features_media`` — PCM WAV decode and
+  DSP features;
+- ``sample_gif_frames`` — GIF decode with disposal compositing, one row
+  per sampled frame (the 1:N op);
+- ``image_features_media`` — luma-patch image embeddings;
+- ``decode_jpeg_media`` — baseline and progressive JPEG decode.
+
+A payload whose mime a codec does not handle is dropped or passed
+through, per each function's docstring.
 """
 
 from __future__ import annotations
@@ -21,10 +32,6 @@ from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "doc_id long, mime string, n_bytes long, digest string, payload binary"
-)
-
-DECODED_SCHEMA = (
-    "doc_id long, mime string, n_bytes long, width int, height int, n_channels int"
 )
 
 
@@ -45,195 +52,14 @@ def to_media_column(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _decode_stub(payload: bytes, mime: str) -> tuple[int, int, int]:
-    """STUB decoder — real image/audio libs are not in this container.
-
-    Deterministic fake: derives (width, height, channels) from payload
-    length so tests are stable. A production deployment replaces this
-    body with PIL/libav decode; the mapInPandas plumbing is unchanged.
-    """
-    n = len(payload)
-    if mime.startswith("image/"):
-        return (n % 640 + 1, n % 480 + 1, 3)
-    if mime.startswith("audio/"):
-        return (n, 1, 1)
-    if mime.startswith("video/"):
-        return (n % 1920 + 1, n % 1080 + 1, 3)
-    raise NotImplementedError(f"no decoder for mime {mime}")
-
-
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes binary"
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
-    """Frame sampling — the one-to-MANY multimodal op (decode is 1:1):
-    each video payload yields up to ``max_frames`` frame rows via
-    mapInPandas. The frame extraction itself is STUBBED (no codecs in
-    this container: a frame = a byte slice); the real thing swaps the
-    slice for libav keyframe extraction — the batch-iterator plumbing,
-    output schema, and row fan-out are what this exercises."""
-
-    def frames(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            ids, idxs, blobs = [], [], []
-            for doc_id, mime, payload in zip(
-                pdf["doc_id"], pdf["mime"], pdf["payload"]
-            ):
-                if not mime.startswith("video/"):
-                    continue
-                for k in range(min(max(len(payload) // every_n_bytes, 1), max_frames)):
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    blobs.append(bytes(payload[k * every_n_bytes : (k + 1) * every_n_bytes]))
-            yield _pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_bytes": blobs}
-            )
-
-    return media.mapInPandas(frames, schema=FRAME_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "doc_id long, mime string, n_bytes long, digest string, payload binary"
-)
-
-
-def resize_media(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Resize — the 1:1 payload-TRANSFORM multimodal op (decode is 1:1
-    payload→metadata, frame-sample is 1:N): each image payload is
-    rewritten to a fixed target size, metadata (n_bytes, digest)
-    recomputed to stay consistent with the new bytes. The pixel
-    resample is STUBBED (no codecs in this container: bytes are tiled /
-    truncated to exactly ``width*height*3``); a production deployment
-    swaps the body for PIL ``Image.resize`` — the mapInPandas batch
-    iterator, the recomputed-metadata contract, and the passthrough of
-    non-image rows are what this exercises. Map-only, no shuffle; batch
-    memory bounded by spark.sql.execution.arrow.maxRecordsPerBatch."""
-    target = width * height * 3
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import pandas as _pd
-
-        def stub(payload: bytes) -> bytes:
-            # STUB resample — swap for a real decoder+resize in prod
-            if len(payload) >= target:
-                return bytes(payload[:target])
-            reps = target // max(len(payload), 1) + 1
-            return bytes((payload * reps)[:target])
-
-        for pdf in batches:
-            out_payload = [
-                stub(p) if m.startswith("image/") else bytes(p)
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes": [len(p) for p in out_payload],
-                    "digest": [hashlib.md5(p).hexdigest() for p in out_payload],
-                    "payload": out_payload,
-                }
-            )
-
-    return media.mapInPandas(resize_batches, schema=RESIZED_SCHEMA)
-
-
-FEATURES_SCHEMA = "doc_id long, mime string, embedding array<float>"
-
-
-def extract_features(media: DataFrame, dim: int = 64) -> DataFrame:
-    """Feature extraction — payload → fixed-``dim`` float embedding, the
-    step that bridges opaque media into the engine's similarity /
-    clustering / dedup operators (``operators.similarity``,
-    ``dedup_semantic_kmeans`` consume exactly this ``array<float>``
-    shape). The encoder is a STUBBED deterministic projection (chunked
-    byte sums, L2-normalized — numpy over the Arrow batch, no per-row
-    Python loops beyond the byte view); production swaps in a CLIP /
-    wav2vec ONNX session per batch iterator (load once per partition,
-    NOT per row — the reason this is mapInPandas and not a scalar UDF).
-    Map-only; output is ~dim*4 bytes/row regardless of payload size, so
-    the downstream shuffle (if any) never carries media bytes."""
-
-    def embed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        def stub(payload: bytes) -> _np.ndarray:
-            # STUB encoder — swap for a real model session in prod
-            arr = _np.frombuffer(payload, dtype=_np.uint8)
-            if arr.size == 0:
-                return _np.zeros(dim, dtype=_np.float32)
-            pad = (-arr.size) % dim
-            arr = _np.pad(arr, (0, pad)).reshape(-1, dim).astype(_np.float64)
-            v = arr.sum(axis=0)
-            norm = _np.linalg.norm(v)
-            return (v / norm if norm > 0 else v).astype(_np.float32)
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    "embedding": [stub(p) for p in pdf["payload"]],
-                }
-            )
-
-    return media.mapInPandas(embed_batches, schema=FEATURES_SCHEMA)
-
-
-def decode_media(media: DataFrame) -> DataFrame:
-    """Arrow-batched decode over ``mapInPandas``: the batch iterator shape
-    a real decoder uses (bounded memory, vectorized transfer, pure
-    per-partition map — no shuffle).
-
-    The closure is deliberately self-contained (local imports, stub
-    inlined): Python workers deserialize it without needing this package
-    on their sys.path, so the catalog entry runs under any driver cwd.
-    """
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        def stub(payload: bytes, mime: str) -> tuple[int, int, int]:
-            # STUB decoder (see _decode_stub) — swap for PIL/libav in prod
-            n = len(payload)
-            if mime.startswith("image/"):
-                return (n % 640 + 1, n % 480 + 1, 3)
-            if mime.startswith("audio/"):
-                return (n, 1, 1)
-            if mime.startswith("video/"):
-                return (n % 1920 + 1, n % 1080 + 1, 3)
-            raise NotImplementedError(f"no decoder for mime {mime}")
-
-        for pdf in batches:
-            dims = [stub(p, m) for p, m in zip(pdf["payload"], pdf["mime"])]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes": pdf["n_bytes"],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "n_channels": [d[2] for d in dims],
-                }
-            )
-
-    return media.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # REAL PNG codec — pure Python + numpy over the stdlib zlib, no external
-# codec libraries (none exist in this container). This replaces the stub
-# for image/png: real chunk parse, CRC verification, IDAT inflate, and
-# per-scanline unfilter (all five PNG filter types). Coverage (r8,
-# closing the r7 verdict scope gaps): every color type at every legal
-# bit depth — gray/RGB/gray+alpha/RGBA at 8/16-bit, sub-byte grayscale,
-# indexed-color with PLTE + tRNS (→ RGBA) — plus Adam7 interlace on
-# both encode and decode. No remaining NotImplementedError in PNG.
+# codec libraries: real chunk parse, CRC verification, IDAT inflate, and
+# per-scanline unfilter (all five PNG filter types). Coverage: every
+# color type at every legal bit depth — gray/RGB/gray+alpha/RGBA at
+# 8/16-bit, sub-byte grayscale, indexed-color with PLTE + tRNS (→ RGBA)
+# — plus Adam7 interlace on both encode and decode. No remaining
+# NotImplementedError in PNG.
 #
 # Both functions are built inside a factory so their qualnames are
 # `<locals>`-scoped: cloudpickle then serializes them BY VALUE into
@@ -1325,7 +1151,7 @@ GIF_FRAMES_SCHEMA = (
 def sample_gif_frames(
     media: DataFrame, every_n: int = 2, max_frames: int = 8
 ) -> DataFrame:
-    """REAL 1:N frame sampling (the non-stub upgrade of ``sample_frames``):
+    """REAL 1:N frame sampling:
     rows whose mime is ``image/gif`` are decoded with the full GIF codec
     (LZW inflate, palette lookup, disposal compositing) and every
     ``every_n``-th composited frame — up to ``max_frames`` per clip — is
@@ -1393,7 +1219,7 @@ _resize_nearest = _make_resize_nearest()
 
 
 def resize_png_media(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """REAL image resize (the non-stub upgrade of ``resize_media``):
+    """REAL image resize:
     ``image/png`` payloads are decoded with the full codec, resampled to
     ``width``x``height`` by exact nearest-neighbor, and re-encoded as
     REAL PNG bytes; dims/bytes metadata is recomputed from the new

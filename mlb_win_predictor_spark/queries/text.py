@@ -20,6 +20,8 @@ from pyspark.sql.window import Window as W
 
 from ..functions.ngrams import word_ngrams
 from ..functions.scalars import md5_int32, stable_round
+from ..operators import dsir
+from ..operators.dsir import DSIR_BUCKETS
 from ..operators.indexing import dense_global_index, exact_ntile
 from ..session import fan_out, input_bytes, load_table
 from .base import QueryDef, sround
@@ -2145,8 +2147,14 @@ FROM per_doc, total
 """
 
 
-DSIR_BUCKETS = 256  # hashed-feature space: substr(md5(token), 1, 2)
 DSIR_TARGET_SOURCE = "src1"  # stands in for the curated target domain
+
+
+def _dsir_counts(docs: DataFrame, tokens: Column) -> DataFrame:
+    """``dsir.bucket_counts`` keyed by (doc_id, is_target), the target
+    class being the ``DSIR_TARGET_SOURCE`` documents."""
+    is_target = (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target")
+    return dsir.bucket_counts(docs, tokens, "doc_id", is_target)
 
 
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2155,86 +2163,26 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     by its hashed-n-gram importance log-weight under a target-domain
     unigram bag model — the standard step that picks "Wikipedia-like"
     web documents for a pretraining mix. Target domain = documents from
-    ``{DSIR_TARGET_SOURCE}``; every other document is raw corpus and
-    gets a weight.
-
-    Features are word unigrams hashed into {DSIR_BUCKETS} buckets via
-    ``substr(md5(token), 1, 2)`` — a cross-engine-identical hash (both
-    engines produce the same hex digest, unlike xxhash64/DuckDB-hash
-    which differ), the trick that keeps this entry fully
-    DuckDB-oracle'd. With add-one smoothing over bucket counts t_b
-    (target) and r_b (raw):
-
-        log w(doc) = Σ_b k_b·[ln(t_b+1) − ln(r_b+1)]
-                     + n·[ln(R+B) − ln(T+B)]
-
-    (k_b per-doc bucket counts, Σk_b = n; T/R total target/raw tokens;
-    B = {DSIR_BUCKETS}). Exact-integer counts everywhere, logs applied
-    once at the end, 6dp stable-round — the ``unigram_logprob_quality``
-    parity discipline.
-
-    Scale shape (100 TB): ONE tokenize pass; the (doc, bucket) exchange
-    is the only corpus-∝ shuffle (map-side combined, ≤{DSIR_BUCKETS}
-    rows per doc); the bucket model is ≤{DSIR_BUCKETS} rows → broadcast;
-    totals are a 1-row broadcast. The raw side never joins on token —
-    only on the 1-byte bucket key against a broadcast table."""
+    ``DSIR_TARGET_SOURCE``; every other document is raw corpus and
+    gets a weight, ``operators.dsir.log_weights`` rounded to 6 dp with
+    ``stable_round`` (the ``unigram_logprob_quality`` parity
+    discipline). The hash rule, the smoothing and the broadcast shape
+    are ``operators.dsir``'s invariants; ``DSIR_SQL`` is the oracle."""
     d = fan_out(load_table(spark, sf_dir, "documents"), min_bytes=2 << 20)
-    toks = d.select(
-        "doc_id",
-        (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target"),
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
-    )
-    # NOTE on the kc re-evaluations (r12 A/B, measured NEGATIVE): kc
-    # feeds three consumers (bucket model, totals, per-doc weights), so
-    # this lazy plan re-runs the tokenize+explode per consumer — and the
-    # budget entry's range sampling adds one more. A kc.persist() was
-    # A/B'd interleaved at sf0.1 and LOST (weights 1.3-1.7s → 1.8-2.3s):
-    # materializing the ~(docs × distinct-buckets) row cache costs more
-    # than recomputing a codegen'd split at bench scale — the same
-    # verdict as kl_divergence_slices' by_cell note. At 100 TB, persist
-    # (or write) kc once so the corpus is tokenized a single time.
-    kc = toks.groupBy(
-        "doc_id", "is_target", F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b")
-    ).agg(F.count(F.lit(1)).alias("k"))
-    model = (
-        kc.groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("t"),
-            F.sum(F.when(~F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("r"),
-        )
-        .select(
-            "b",
-            (
-                F.log(F.col("t").cast("double") + 1.0)
-                - F.log(F.col("r").cast("double") + 1.0)
-            ).alias("lr"),
-            "t",
-            "r",
-        )
-    )
-    totals = model.agg(
-        (
-            F.log(F.sum("r").cast("double") + F.lit(float(DSIR_BUCKETS)))
-            - F.log(F.sum("t").cast("double") + F.lit(float(DSIR_BUCKETS)))
-        ).alias("norm")
-    )
-    return (
-        kc.filter(~F.col("is_target"))
-        .join(F.broadcast(model.select("b", "lr")), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").cast("long").alias("n_tokens"),
-            F.sum(F.col("k").cast("double") * F.col("lr")).alias("sum_klr"),
-        )
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "doc_id",
-            "n_tokens",
-            stable_round(
-                F.col("sum_klr") + F.col("n_tokens").cast("double") * F.col("norm"),
-                6,
-            ).alias("dsir_logweight"),
-        )
+    # kc feeds three consumers (bucket model, norm, per-doc weights), so
+    # this lazy plan re-runs the tokenize+explode per consumer. A
+    # kc.persist() measured slower at sf0.1 (weights 1.3-1.7s →
+    # 1.8-2.3s): materializing the ~(docs × distinct-buckets) row cache
+    # costs more than recomputing a codegen'd split at bench scale. At
+    # 100 TB, persist (or write) kc once so the corpus is tokenized once.
+    kc = _dsir_counts(d, F.split(F.trim(F.col("text")), r"\s+"))
+    model, norm = dsir.fit(kc)
+    return dsir.log_weights(
+        kc.filter(~F.col("is_target")).join(F.broadcast(model.select("b", "lr")), "b"),
+        F.col("lr"),
+        norm,
+    ).select(
+        "doc_id", "n_tokens", stable_round(F.col("log_weight"), 6).alias("dsir_logweight")
     )
 
 
@@ -2288,42 +2236,22 @@ def dsir_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dsir_bucket_model(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> tuple[dict, float]:
-    """Train the DSIR bucket model batch-side and export it driver-side
-    for the STREAMING ingest gate (``streaming.jobs.dsir_select_stream``):
-    returns ({bucket_hex: ln((t_b+1)/(r_b+1))}, norm) — ≤{DSIR_BUCKETS}
-    rows + one scalar, the whole model. The bounded collect is the
-    point: a 2-KB model rides a plan literal into every micro-batch.
-    ``docs`` overrides the training corpus (r12: the DSIR-ordered
-    stream capstone trains on the NON-BENCH slice, batch v3's
-    eval-must-not-influence-selection discipline)."""
+) -> tuple[dict[str, float], float]:
+    """Fit the DSIR bucket model batch-side and collect it for a
+    streaming gate (``streaming.jobs.dsir_select_stream``,
+    ``llm_curation_stream``): returns ``({bucket_hex: lr}, norm)``, at
+    most 256 entries plus one scalar. Both are collected from
+    ``operators.dsir.fit``, the same expressions the batch entries
+    evaluate, so a stream scores with bit-identical doubles. ``docs``
+    overrides the training corpus (the DSIR-ordered stream capstone
+    trains on the non-bench slice, so the eval slice cannot influence
+    selection)."""
     d = docs if docs is not None else load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target"),
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
-    )
-    model = (
-        toks.groupBy(
-            F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b")
-        )
-        .agg(
-            F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("t"),
-            F.sum(F.when(~F.col("is_target"), 1).otherwise(0)).alias("r"),
-        )
-        .collect()
-    )
-    import math
-
-    lrs = {
-        row.b: math.log((row.t + 1.0)) - math.log((row.r + 1.0)) for row in model
-    }
-    t_total = sum(row.t for row in model)
-    r_total = sum(row.r for row in model)
-    norm = math.log(r_total + float(DSIR_BUCKETS)) - math.log(
-        t_total + float(DSIR_BUCKETS)
-    )
-    return lrs, norm
+    model, norm = dsir.fit(_dsir_counts(d, F.split(F.trim(F.col("text")), r"\s+")))
+    # one job: the norm side reuses the model's exchange
+    rows = model.select("b", "lr").crossJoin(F.broadcast(norm)).collect()
+    # an empty corpus fits no bucket; its norm is ln(B) − ln(B) = 0
+    return {r.b: r.lr for r in rows}, (rows[0].norm if rows else 0.0)
 
 
 DSIR_SQL = rf"""
@@ -2680,12 +2608,12 @@ FROM b GROUP BY source
 
 
 def llm_dataset_pipeline_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capstone v3 — the curation flow with DSIR-ORDERED budget spending
-    (r9 verdict #4): quality gate → exact dedup → benchmark
-    decontamination → per-source token budget spent in descending DSIR
-    per-token importance (Xie et al. 2023) instead of v1's neutral
-    hash order — each source's budget goes to its most target-like
-    documents, which is the selection step DSIR exists for.
+    """Capstone v3 — the curation flow with DSIR-ORDERED budget spending:
+    quality gate → exact dedup → benchmark decontamination → per-source
+    token budget spent in descending DSIR per-token importance (Xie et
+    al. 2023) instead of v1's neutral hash order — each source's budget
+    goes to its most target-like documents, which is the selection step
+    DSIR exists for.
 
     Stages 1-3 and the rollup are ``llm_dataset_pipeline``'s own code
     (``_llm_pipe_base`` / ``_llm_pipe_finish`` — shared by call, not
@@ -2693,69 +2621,28 @@ def llm_dataset_pipeline_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     hook. The DSIR bucket model is trained INSIDE the pipeline on the
     non-bench corpus (the eval slice must not influence selection —
     v1's decontamination argument applied to the ranking model), target
-    class = ``{DSIR_TARGET_SOURCE}`` documents, and every corpus
-    document gets a weight: the ``dsir_importance_weights`` formula
-    verbatim, 6dp-rounded BEFORE ordering so both engines rank
-    identical values (the ``ccnet_perplexity_buckets`` discipline).
+    class = ``DSIR_TARGET_SOURCE`` documents, and every corpus document
+    gets a weight: ``operators.dsir.log_weights``, 6dp-rounded BEFORE
+    ordering so both engines rank identical values (the
+    ``ccnet_perplexity_buckets`` discipline).
 
     Fully DuckDB-oracle'd: the weight CTEs reuse the dsir entry's
     SQL shape inside v1's pipeline CTE chain.
 
     Scale shape on top of v1's windows: one extra (doc, bucket)
     exchange off the already-tokenized corpus (map-side combined,
-    ≤{DSIR_BUCKETS} rows per doc), a ≤{DSIR_BUCKETS}-row broadcast
-    model, and a doc-grain weights join — no corpus-sized sort, no
-    driver state beyond the broadcast."""
+    ≤256 rows per doc), a ≤256-row broadcast model, and a doc-grain
+    weights join — no corpus-sized sort, no driver state beyond the
+    broadcast."""
     toked, flagged, is_bench = _llm_pipe_base(spark, sf_dir)
 
     def dsir_order(c: DataFrame):
-        kc = (
-            flagged.select(
-                "doc_id",
-                (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target"),
-                F.explode("toks").alias("w"),
-            )
-            .groupBy(
-                "doc_id",
-                "is_target",
-                F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b"),
-            )
-            .agg(F.count(F.lit(1)).alias("k"))
-        )
-        model = kc.groupBy("b").agg(
-            F.sum(F.when(F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("t"),
-            F.sum(F.when(~F.col("is_target"), F.col("k")).otherwise(F.lit(0))).alias("r"),
-        ).select(
-            "b",
-            (
-                F.log(F.col("t").cast("double") + 1.0)
-                - F.log(F.col("r").cast("double") + 1.0)
-            ).alias("lr"),
-            "t",
-            "r",
-        )
-        totals = model.agg(
-            (
-                F.log(F.sum("r").cast("double") + F.lit(float(DSIR_BUCKETS)))
-                - F.log(F.sum("t").cast("double") + F.lit(float(DSIR_BUCKETS)))
-            ).alias("norm")
-        )
-        wts = (
-            kc.join(F.broadcast(model.select("b", "lr")), "b")
-            .groupBy("doc_id")
-            .agg(
-                F.sum("k").cast("long").alias("_n"),
-                F.sum(F.col("k").cast("double") * F.col("lr")).alias("_sklr"),
-            )
-            .crossJoin(F.broadcast(totals))
-            .select(
-                "doc_id",
-                stable_round(
-                    F.col("_sklr") + F.col("_n").cast("double") * F.col("norm"), 6
-                ).alias("_lw"),
-            )
-        )
-        # LEFT join (r11, from r10 advice): wts only covers docs that
+        kc = _dsir_counts(flagged, F.col("toks"))
+        model, norm = dsir.fit(kc)
+        wts = dsir.log_weights(
+            kc.join(F.broadcast(model.select("b", "lr")), "b"), F.col("lr"), norm
+        ).select("doc_id", stable_round(F.col("log_weight"), 6).alias("_lw"))
+        # LEFT join: wts only covers docs that
         # produced ≥1 token row — explode drops NULL-text documents —
         # so an inner join would silently remove those docs from EVERY
         # rollup counter (n_input onward), breaking the shared-stage

@@ -78,27 +78,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r12 (optimization guide §3.1): let the planner pick a shuffled
-        # HASH join when its size conditions hold instead of always
-        # preferring sort-merge — skips both per-partition sorts when one
-        # side is modestly small. NOT a local-only tune: the hash-join
-        # size guards (canBuildLocalHashMap + muchSmaller) scale with
-        # autoBroadcastJoinThreshold × shuffle.partitions, equal-size
-        # joins still plan sort-merge (spill-safe), and hints/broadcasts
-        # are unaffected. Measured at sf0.1 over 6 shuffle-join entries:
-        # every median flat-to-faster, worst-case samples down ~20-50%.
-        # Rollback lever (r13, ADVICE r12): SHJ's build side cannot
-        # spill, and the size guards lean on Catalyst estimates that get
-        # unreliable downstream of Python-UDF/filter nodes. The r13
-        # all-84-plan sweep found only 3 SHJs, each building a
-        # unique-key side (no hot-key concentration possible), and
-        # test_equal_size_corpus_join_stays_sort_merge pins the guard —
-        # but a deployment seeing build-side OOM at larger scale flips
-        # SPARK_GRAFT_PREFER_SMJ=true, no code change.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # Let the planner pick a shuffled HASH join when its size guards
+        # hold (canBuildLocalHashMap + muchSmaller, which scale with
+        # autoBroadcastJoinThreshold × shuffle.partitions); equal-size
+        # joins still plan sort-merge, which can spill, and
+        # test_equal_size_corpus_join_stays_sort_merge pins that guard.
+        # A shuffled hash join's build side cannot spill: a deployment
+        # that sees build-side OOM sets this runtime SQL conf back with
+        # spark.conf.set("spark.sql.join.preferSortMergeJoin", "true").
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -435,10 +435,10 @@ def llm_curation_stream(
     gram_n: int = 5,
     dsir_model: tuple[dict[str, float], float] | None = None,
 ):
-    """The STREAMING LLM-curation capstone (r11, r10 verdict #5): the
-    incremental dual of the batch ``llm_dataset_pipeline*`` entries,
-    composed from the gates this module already ships one-by-one — ONE
-    foreachBatch body runs, in stage order per micro-batch:
+    """The STREAMING LLM-curation capstone: the incremental dual of the
+    batch ``llm_dataset_pipeline*`` entries, composed from the gates this
+    module already ships one-by-one — ONE foreachBatch body runs, in
+    stage order per micro-batch:
 
     1. **quality** — ``queries.text.llm_quality_expr`` (the batch
        capstone's exact rule, shared by call);
@@ -469,13 +469,13 @@ def llm_curation_stream(
        order; the stream==batch parity test therefore feeds epochs in
        doc_id order so both orders coincide.
 
-       ``dsir_model=(bucket_logratios, norm)`` (r12, r11 verdict #7)
-       upgrades the WITHIN-EPOCH spending order to descending DSIR
-       per-token importance — each epoch's clean docs are scored
-       against the batch-trained hashed-unigram bucket model (the
-       ``dsir_select_stream`` literal-map plan, batch v3's exact float
-       discipline: 6dp-rounded total log-weight, per-token order,
-       doc_id tiebreak) and the budget window spends best-first inside
+       ``dsir_model=(bucket_logratios, norm)`` (from
+       ``queries.text.dsir_bucket_model``) upgrades the WITHIN-EPOCH
+       spending order to descending DSIR per-token importance — each
+       epoch's clean docs are scored by ``operators.dsir.log_weights``
+       against the model as a ``create_map`` literal, with batch v3's
+       arithmetic (6dp-rounded total log-weight, per-token order,
+       doc_id tiebreak), and the budget window spends best-first inside
        the epoch. This is the STREAM-FEASIBLE half of batch v3's
        global DSIR order, and exactly half is all a stream can have:
        admission is irreversible (epoch N's kept docs are already in
@@ -505,18 +505,11 @@ def llm_curation_stream(
     Nothing scales with corpus size except the index scan, which a
     bucketed-by-(band_idx, band_sig) layout prunes to matching buckets."""
     from ..functions.scalars import stable_round
+    from ..operators import dsir
     from ..operators.dedup import incremental_neardup_filter, minhash_band_index
     from ..queries.text import llm_quality_expr
 
-    lr_map = None
-    dsir_norm = 0.0
-    if dsir_model is not None:
-        lrs, dsir_norm = dsir_model
-        items: list = []
-        for bkt, lr in sorted(lrs.items()):
-            items.append(F.lit(bkt))
-            items.append(F.lit(float(lr)))
-        lr_map = F.create_map(*items) if items else F.create_map()
+    lr = dsir.lr_literal(dsir_model[0]) if dsir_model is not None else None
 
     def curate(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -583,39 +576,17 @@ def llm_curation_stream(
             prior = spent.groupBy("source").agg(
                 F.sum("tokens_clean").alias("_spent_before")
             )
-            if lr_map is not None:
-                # DSIR within-epoch spending order: score the epoch's clean
-                # docs against the broadcast-literal bucket model (batch
-                # v3's exact grain — 6dp-rounded total log-weight, ordered
-                # per-token, doc_id tiebreak; LEFT join + sentinel so a
+            if dsir_model is not None:
+                # DSIR within-epoch spending order: the epoch's clean docs
+                # scored against the literal bucket model with batch v3's
+                # arithmetic (6dp-rounded total log-weight, ordered per
+                # token, doc_id tiebreak; LEFT join + sentinel so a
                 # token-less doc still sorts deterministically last)
-                wts = (
-                    clean.select(
-                        "doc_id",
-                        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
-                    )
-                    .select(
-                        "doc_id",
-                        F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b"),
-                    )
-                    .groupBy("doc_id", "b")
-                    .agg(F.count(F.lit(1)).alias("k"))
-                    .groupBy("doc_id")
-                    .agg(
-                        F.sum("k").cast("long").alias("_n"),
-                        F.sum(
-                            F.col("k").cast("double")
-                            * F.coalesce(lr_map[F.col("b")], F.lit(0.0))
-                        ).alias("_sklr"),
-                    )
-                    .select(
-                        "doc_id",
-                        stable_round(
-                            F.col("_sklr")
-                            + F.col("_n").cast("double") * F.lit(float(dsir_norm)),
-                            6,
-                        ).alias("_lw"),
-                    )
+                kc = dsir.bucket_counts(
+                    clean, F.split(F.trim(F.col("text")), r"\s+"), "doc_id"
+                )
+                wts = dsir.log_weights(kc, lr, dsir_model[1]).select(
+                    "doc_id", stable_round(F.col("log_weight"), 6).alias("_lw")
                 )
                 spend_base = clean.join(wts, "doc_id", "left")
                 spend_order = [
@@ -722,16 +693,17 @@ def dsir_select_stream(
     kept_path: str,
     checkpoint: str,
 ):
-    """Streaming ingest DSIR gate (r9 — the streaming dual of the
-    ``dsir_importance_weights`` catalog entry): each micro-batch of
+    """Streaming ingest DSIR gate, the streaming dual of the
+    ``dsir_importance_weights`` catalog entry: each micro-batch of
     documents is scored against a BATCH-TRAINED hashed-unigram bucket
     model (Xie et al. 2023) and only documents whose per-token importance
     log-weight clears ``per_token_threshold`` are kept — "ingest only
     what looks like the target domain", the streaming form of data
     selection.
 
-    The model is ≤256 (bucket → ln((t_b+1)/(r_b+1))) entries plus the
-    smoothing normalizer — it ships as a ``create_map`` LITERAL, so the
+    The model is ``queries.text.dsir_bucket_model``'s ≤256
+    ``bucket → lr`` entries plus the normalizer; it ships as a
+    ``create_map`` literal (``operators.dsir.lr_literal``), so the
     per-batch plan is tokenize → md5-bucket → map lookup → doc rollup:
     everything map-side except the doc-grain aggregation, no Python UDF,
     no streaming state, batch-size-only scaling (the same posture as
@@ -739,48 +711,21 @@ def dsir_select_stream(
     overwrite (replay-safe at-least-once; readers take
     ``read_epoch_union``).
 
-    score(doc) = [Σ_b k_b·lr_b + n·norm] / n  — identical integers and
-    the same one-final-arithmetic float discipline as the batch entry,
-    so a doc scores the SAME whether it arrives in a batch backfill or
-    through this gate (pinned by tests/test_streaming.py)."""
-    items: list = []
-    for b, lr in sorted(bucket_logratios.items()):
-        items.append(F.lit(b))
-        items.append(F.lit(float(lr)))
-    lr_map = F.create_map(*items) if items else F.create_map()
+    score(doc) = ``operators.dsir.log_weights`` / n, divided unrounded.
+    The model's doubles are the batch fit's own, so a doc scores the
+    same (to the batch entry's 6 dp rounding) whether it arrives in a
+    batch backfill or through this gate."""
+    from ..operators import dsir
+
+    lr = dsir.lr_literal(bucket_logratios)
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
-        toks = F.split(F.trim(F.col("text")), r"\s+")
-        kb = (
-            batch.select("doc_id", F.explode(toks).alias("w"))
-            .select(
-                "doc_id",
-                F.substring(F.md5(F.col("w").cast("binary")), 1, 2).alias("b"),
-            )
-            .groupBy("doc_id", "b")
-            .agg(F.count(F.lit(1)).alias("k"))
-        )
-        scored = (
-            kb.select(
-                "doc_id",
-                "k",
-                # buckets unseen in training fall back to the smoothed
-                # empty-bucket ratio ln(1/1) = 0.0, matching the batch
-                # model's full-outer + coalesce(0) semantics
-                (F.col("k").cast("double") * F.coalesce(lr_map[F.col("b")], F.lit(0.0))).alias("klr"),
-            )
-            .groupBy("doc_id")
-            .agg(
-                F.sum("k").cast("long").alias("n_tokens"),
-                F.sum("klr").alias("sum_klr"),
-            )
-            .select(
-                "doc_id",
-                (
-                    (F.col("sum_klr") + F.col("n_tokens").cast("double") * F.lit(float(norm)))
-                    / F.col("n_tokens").cast("double")
-                ).alias("per_token_logweight"),
-            )
+        kc = dsir.bucket_counts(batch, F.split(F.trim(F.col("text")), r"\s+"), "doc_id")
+        scored = dsir.log_weights(kc, lr, norm).select(
+            "doc_id",
+            (F.col("log_weight") / F.col("n_tokens").cast("double")).alias(
+                "per_token_logweight"
+            ),
         )
         kept = (
             batch.join(scored, "doc_id", "left")
@@ -903,7 +848,7 @@ def incremental_rollup_stream(events: DataFrame, rollup_path: str, checkpoint: s
     snapshot with id < N and overwrites ``epoch=N`` — deterministic
     inputs + deterministic target + overwrite = a replayed epoch
     reproduces, never re-adds. A crash mid-write leaves ``epoch=N``
-    without _SUCCESS; readers (``read_rollup``) skip it and the retry
+    without _SUCCESS; readers (``read_snapshot``) skip it and the retry
     overwrites it. This closes BOTH crash windows a
     marker-after-overwrite scheme leaves open (replay double-count, and
     a torn final overwrite with no intact copy). Snapshots are
@@ -993,10 +938,6 @@ def read_snapshot(spark, path: str) -> DataFrame | None:
     if not epochs:
         return None
     return spark.read.parquet(f"{path}/epoch={epochs[-1]}")
-
-
-# read_rollup is the rollup-flavored name for the same operation
-read_rollup = read_snapshot
 
 
 def read_epoch_union(

@@ -1,15 +1,15 @@
-"""Interleaved sf0.1-vs-sf1 scaling measurement (r9).
+"""Interleaved base-vs-scaled SF scaling measurement.
 
-The two-process protocol (full sweep at the base SF, second full sweep
+A two-process protocol (full sweep at the base SF, a second full sweep
 at the scaled SF, divide) lets ambient machine drift land entirely on
-one leg: the r9 re-run saw the scaled leg inflate ~50% against an r8
-artifact whose code was SLOWER — pure between-session noise (see
-PLANS.md "Round-9 drift bisect"). This script measures the ratio the
-way the repo's bench memory says survives ambient load: ONE Spark
-session, each query timed at the base dir and the scaled dir
-BACK-TO-BACK (base leg, scaled leg, next query), so whatever the box is
-doing at minute N hits both legs of query N equally. Emits
-BENCH_SF1.json in scripts/scale_report.py's schema.
+one leg: a re-run once saw the scaled leg inflate ~50% against an
+artifact whose code was slower — pure between-session noise (PLANS.md
+"Round-9 drift bisect"). This script measures the ratio the way that
+survives ambient load: ONE Spark session, each query timed at the base
+dir and the scaled dir BACK-TO-BACK (base leg, scaled leg, next
+query), so whatever the box is doing at minute N hits both legs of
+query N equally. Emits a scaling report in the committed
+BENCH_SF1.json's schema.
 
 Usage:
     python scripts/make_scale.py --src /root/testdata/sf0.1 \

@@ -382,10 +382,8 @@ def test_incremental_rollup_stream_matches_batch_and_skips_replays(spark, tmp_pa
     (fresh checkpoint, same markers) must NOT double-count."""
     import pandas as pd
 
-    from mlb_win_predictor_spark.streaming import (
-        incremental_rollup_stream,
-        read_rollup,
-    )
+    from mlb_win_predictor_spark.streaming import incremental_rollup_stream
+    from mlb_win_predictor_spark.streaming.jobs import read_snapshot
 
     src = tmp_path / "ev_roll"
     src.mkdir()
@@ -413,7 +411,7 @@ def test_incremental_rollup_stream_matches_batch_and_skips_replays(spark, tmp_pa
     def snapshot():
         return {
             (str(r.day), r.event_type): (r.n, str(r.total))
-            for r in read_rollup(spark, str(tmp_path / "rollup")).collect()
+            for r in read_snapshot(spark, str(tmp_path / "rollup")).collect()
         }
 
     got = snapshot()
@@ -586,6 +584,66 @@ def test_incremental_bitmap_distinct_matches_batch_and_replay_safe(spark, tmp_pa
     assert again == want
 
 
+def _dsir_corpus(spark, tmp_path):
+    """Two target docs and four raw docs (two target-like, two alien),
+    written as ``<base>/documents.parquet``; returns (docs, base)."""
+    import os
+
+    from mlb_win_predictor_spark.queries.text import DSIR_TARGET_SOURCE
+
+    rows = [
+        (1, "alpha beta gamma alpha beta", "en", DSIR_TARGET_SOURCE, 0),
+        (2, "beta gamma delta alpha gamma", "en", DSIR_TARGET_SOURCE, 0),
+        (100, "alpha beta gamma alpha", "en", "srcX", 0),
+        (101, "zork quux fnord grue", "en", "srcX", 0),
+        (102, "alpha common beta words", "en", "srcY", 0),
+        (103, "unrelated noise tokens here", "en", "srcY", 0),
+    ]
+    base = str(tmp_path / "model_dir")
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    os.makedirs(base)
+    docs.write.parquet(base + "/documents.parquet")
+    return docs, base
+
+
+def test_dsir_bucket_model_is_the_batch_fit(spark, tmp_path):
+    """The model a stream collects is the batch fit, bit for bit: every
+    bucket's lr and the norm equal (no tolerance) the values the batch
+    entries' fit computes over the same corpus and target class. Its
+    keys follow the hash rule, the first two hex digits of md5(token):
+    the oracle corpora cannot pin that rule, because their vocabulary
+    has no two-digit collision and any one-to-one relabeling of the
+    buckets leaves every score unchanged."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from mlb_win_predictor_spark.operators import dsir
+    from mlb_win_predictor_spark.queries.text import (
+        DSIR_TARGET_SOURCE,
+        dsir_bucket_model,
+    )
+
+    docs, base = _dsir_corpus(spark, tmp_path)
+    lrs, norm = dsir_bucket_model(spark, base)
+
+    kc = dsir.bucket_counts(
+        docs,
+        F.split(F.trim(F.col("text")), r"\s+"),
+        "doc_id",
+        (F.col("source") == DSIR_TARGET_SOURCE).alias("is_target"),
+    )
+    model, batch_norm = dsir.fit(kc)
+    batch_lrs = {r.b: r.lr for r in model.collect()}
+    assert len(batch_lrs) > 1
+    assert lrs == batch_lrs
+    assert norm == batch_norm.first().norm
+    vocab = {w for r in docs.collect() for w in r.text.split()}
+    assert set(lrs) == {hashlib.md5(w.encode()).hexdigest()[:2] for w in vocab}
+
+
 def test_dsir_select_stream_matches_batch_scores(spark, tmp_path):
     """Streaming DSIR ingest gate: a document must score IDENTICALLY
     whether it goes through the batch entry or the streaming gate (same
@@ -604,23 +662,7 @@ def test_dsir_select_stream_matches_batch_scores(spark, tmp_path):
         read_epoch_union,
     )
 
-    rows = [
-        (1, "alpha beta gamma alpha beta", "en", DSIR_TARGET_SOURCE, 0),
-        (2, "beta gamma delta alpha gamma", "en", DSIR_TARGET_SOURCE, 0),
-        (100, "alpha beta gamma alpha", "en", "srcX", 0),
-        (101, "zork quux fnord grue", "en", "srcX", 0),
-        (102, "alpha common beta words", "en", "srcY", 0),
-        (103, "unrelated noise tokens here", "en", "srcY", 0),
-    ]
-    base = str(tmp_path / "model_dir")
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    import os
-
-    os.makedirs(base)
-    docs.write.parquet(base + "/documents.parquet")
-
+    docs, base = _dsir_corpus(spark, tmp_path)
     lrs, norm = dsir_bucket_model(spark, base)
     batch = {
         r.doc_id: r.dsir_logweight / r.n_tokens
