@@ -24,6 +24,9 @@ property-tested against exact oracles at small SF
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.ml.feature import CountVectorizer, MinHashLSH
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -99,6 +102,21 @@ def ngram_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     return staged.withColumn(
         "shingles", F.array_distinct(word_ngrams(F.col("_toks"), n))
     ).drop("_toks")
+
+
+def _hashed_shingles(
+    docs: DataFrame, id_col: str, text_col: str, n: int, hash_family: str
+) -> DataFrame:
+    """(id, ``shingles`` array<long>): each doc's shingle set with every
+    shingle hashed to a long ONCE, so every downstream pass (min-hashes,
+    exact set re-checks, bottom-k postings) works on longs. Set
+    semantics survive w.h.p. (64-bit collisions ~ n²/2⁶⁴)."""
+    return ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
+        id_col,
+        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
+            "shingles"
+        ),
+    )
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
@@ -227,9 +245,6 @@ def minhash_banded_pairs(
     one hash-join back to shingle sets for candidates only — cost tracks
     actual collisions, never n².
     """
-    r = num_hashes // bands
-    if bands * r != num_hashes:
-        raise ValueError("num_hashes must be divisible by bands")
     # fan_out: the shingle build + 32 min-hash folds are per-token CPU
     # that dwarfs row bytes, and a small parquet reads as 1-2 row groups
     # — without this the ENTIRE signature pipeline (and, because it is
@@ -238,16 +253,7 @@ def minhash_banded_pairs(
     # the corpus-scale case.
     from ..session import fan_out
 
-    docs = fan_out(docs)
-    # hash each shingle string to a long ONCE; every downstream pass
-    # (32 min-hashes, the exact-Jaccard set ops) operates on longs.
-    # Set semantics survive w.h.p. (64-bit collisions ~ n²/2⁶⁴).
-    sh = ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
-        id_col,
-        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
-            "shingles"
-        ),
-    )
+    sh = _hashed_shingles(fan_out(docs), id_col, text_col, n, hash_family)
     # cache: the hashed shingle sets feed the signature once and BOTH
     # sides of the candidate re-check; the signature table feeds both
     # sides of the band self-join. Without these the whole
@@ -291,11 +297,6 @@ def band_candidate_pairs(
     the candidate-generation half of ``minhash_banded_pairs``, factored
     out so other re-checks (containment) can ride the same banding.
 
-    Portable family: the band signature is the '-'-joined min-hash
-    string instead of an xxhash64 fold (band equality is all banding
-    needs; the string form is what the DuckDB dual's ``string_agg``
-    reproduces).
-
     SKEW: nothing in the data bounds a
     (band_idx, band_sig) bucket — a cluster of m near-identical docs
     shares every band signature, and the naive self-join puts all
@@ -327,85 +328,85 @@ def band_candidate_pairs(
     job's tail bounded — enable it there (the failure mode it guards
     against is a single unsplittable join key, which no conf can fix
     after the fact)."""
-    r = num_hashes // bands
-    if bands * r != num_hashes:
-        raise ValueError("num_hashes must be divisible by bands")
-    # persist: the signature table feeds BOTH sides of the band self-join
-    # (num_docs x num_hashes longs — bounded; same discipline as
-    # minhash_banded_pairs, whose candidate half this is)
     mins = minhash_signatures(
         sh, id_col, num_hashes=num_hashes, seed=seed, hash_family=hash_family
-    ).persist()
-    if hash_family == "md5":
-        band_cols = [
-            F.concat_ws("-", *[F.col(f"h{j * r + k}") for k in range(r)])
-            for j in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(F.array(*[F.col(f"h{j * r + k}") for k in range(r)]))
-            for j in range(bands)
-        ]
-    band_rows = mins.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
     )
+    band_rows = _band_rows(mins, id_col, num_hashes, bands, hash_family)
+    # persist: the signature table feeds BOTH sides of the band self-join
+    # (num_docs x num_hashes longs — bounded; same discipline as
+    # minhash_banded_pairs, whose candidate half this is). Persisting
+    # after the lazy band projection is built still serves it (the cache
+    # is looked up when the plan executes), and keeps a bad band layout
+    # from leaving a cache entry behind.
+    mins.persist()
     if band_split is None:
-        return (
-            band_rows.alias("a")
-            .join(
-                band_rows.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_sig") == F.col("b.band_sig"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
+        return _band_self_join(band_rows, band_rows, id_col).distinct()
     bucket_n = band_rows.groupBy("band_idx", "band_sig").agg(
         F.count(F.lit(1)).alias("_bn")
     )
     tagged = band_rows.join(bucket_n, ["band_idx", "band_sig"])
     cold = tagged.filter(F.col("_bn") <= band_split)
     hot = tagged.filter(F.col("_bn") > band_split)
-    cold_pairs = (
-        cold.alias("a")
-        .join(
-            cold.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-    )
     wb = W.partitionBy("band_idx", "band_sig").orderBy(F.col(id_col).asc())
     ranked = hot.withColumn(
         "_ck", ((F.row_number().over(wb) - F.lit(1)) / F.lit(band_split)).cast("int")
     )
-    hot_pairs = (
-        ranked.alias("a")
-        .join(
-            ranked.select(
-                F.col(id_col),
-                "band_idx",
-                "band_sig",
-                F.explode(F.sequence(F.lit(0), F.col("_ck"))).alias("_ck"),
-            ).alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a._ck") == F.col("b._ck"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+    hot_pairs = _band_self_join(
+        ranked,
+        ranked.select(
+            F.col(id_col),
+            "band_idx",
+            "band_sig",
+            F.explode(F.sequence(F.lit(0), F.col("_ck"))).alias("_ck"),
+        ),
+        id_col,
+        ("band_idx", "band_sig", "_ck"),
+    )
+    return _band_self_join(cold, cold, id_col).unionByName(hot_pairs).distinct()
+
+
+def _band_rows(
+    mins: DataFrame, id_col: str, num_hashes: int, bands: int, hash_family: str
+) -> DataFrame:
+    """One (id, band_idx, band_sig) row per LSH band per doc of a
+    signature table (columns h0..h{num_hashes-1}): ``bands`` groups of
+    ``num_hashes/bands`` min-hashes. ``band_sig`` is the xxhash64 of the
+    group, or for the portable md5 family its '-'-joined STRING (band
+    equality is all banding needs; the string form is what the DuckDB
+    duals' ``string_agg`` reproduces)."""
+    r = num_hashes // bands
+    if bands * r != num_hashes:
+        raise ValueError("num_hashes must be divisible by bands")
+    groups = [[F.col(f"h{j * r + k}") for k in range(r)] for j in range(bands)]
+    if hash_family == "md5":
+        band_cols = [F.concat_ws("-", *g) for g in groups]
+    else:
+        band_cols = [F.xxhash64(F.array(*g)) for g in groups]
+    return mins.select(
+        F.col(id_col),
+        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
+    )
+
+
+def _band_self_join(
+    a: DataFrame,
+    b: DataFrame,
+    id_col: str,
+    keys: tuple[str, ...] = ("band_idx", "band_sig"),
+) -> DataFrame:
+    """(id_a, id_b) for every a-row and b-row that agree on ``keys`` with
+    id_a < id_b — the LSH candidate rule (two docs agreeing on an entire
+    band), shared by the batch pairs (plain and ``band_split`` paths)
+    and the in-batch probe of ``incremental_neardup_filter``. A pair that
+    agrees on several bands appears once per band; callers dedupe."""
+    on = reduce(operator.and_, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    return (
+        a.alias("a")
+        .join(b.alias("b"), on & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
     )
-    return cold_pairs.unionByName(hot_pairs).distinct()
 
 
 def containment_banded_pairs(
@@ -450,16 +451,10 @@ def containment_banded_pairs(
     Returns the exact entry's schema (doc_a, doc_b, n_shared,
     containment_a_in_b, containment_b_in_a), pairs kept when EITHER
     direction >= threshold over the candidate set."""
-    sh = ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
-        id_col,
-        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
-            "shingles"
-        ),
-    )
     # one corpus-scale projection feeds the signatures, the bottom-k
     # postings, and both sides of the re-check (persist: measured 3x on
     # the banded path; the 100 TB pattern is persisting this to storage)
-    sh = sh.persist()
+    sh = _hashed_shingles(docs, id_col, text_col, n, hash_family).persist()
     cand_band = band_candidate_pairs(
         sh,
         id_col,
@@ -689,134 +684,60 @@ def minhash_band_index(
     (band_idx, band_sig) so incremental probes touch only matching
     buckets; text is never needed again. ``band_sig`` is a long for the
     xxhash64 default, a '-'-joined STRING for the portable md5 family
-    (r11) — probe and index must use the same family."""
-    r = num_hashes // bands
-    if bands * r != num_hashes:
-        raise ValueError("num_hashes must be divisible by bands")
+    — probe and index must use the same family."""
     # fan_out: same rationale as minhash_banded_pairs — the shingle +
     # 32-min-hash projection is per-token CPU pinned to the scan's
     # row-group splits on small parquet; no-op at corpus scale.
     from ..session import fan_out
 
-    docs = fan_out(docs)
-    sh = ngram_shingles(docs.select(id_col, text_col), text_col, n).select(
-        id_col,
-        F.transform("shingles", lambda s: _shingle_hash(s, hash_family)).alias(
-            "shingles"
-        ),
-    )
+    sh = _hashed_shingles(fan_out(docs), id_col, text_col, n, hash_family)
     mins = minhash_signatures(
         sh, id_col, num_hashes=num_hashes, seed=seed, hash_family=hash_family
     )
-    if hash_family == "md5":
-        # portable family: '-'-joined STRING signature (band_sig string),
-        # re-derivable in DuckDB — see band_candidate_pairs
-        band_cols = [
-            F.concat_ws("-", *[F.col(f"h{j * r + k}") for k in range(r)])
-            for j in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(F.array(*[F.col(f"h{j * r + k}") for k in range(r)]))
-            for j in range(bands)
-        ]
-    return mins.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig"),
-    )
+    return _band_rows(mins, id_col, num_hashes, bands, hash_family)
 
 
 def incremental_neardup_filter(
     index: DataFrame,
     new_docs: DataFrame,
+    new_bands: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    hash_family: str = "xxhash64",
-    new_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental corpus dedup: keep only new docs that are near-dups of
     neither the already-indexed corpus nor an earlier (smaller-id) doc in
-    the same batch. Collision = agreeing on any full LSH band (same
-    banding as ``minhash_banded_pairs``; same recall characteristics).
+    the same batch. Collision = agreeing on any full LSH band (the
+    ``_band_self_join`` rule of ``minhash_banded_pairs``; same recall
+    characteristics).
+
+    ``new_bands`` is the batch's band table, ``minhash_band_index(new_docs)``
+    with the same parameters and hash family as ``index``. The caller
+    builds and persists it (it is read twice here, and a streaming caller
+    also appends the survivors' bands to the index) and releases it.
 
     Scale shape: the new batch is small relative to the corpus, so its
     band table is **broadcast** and the big index streams through a
     map-side hash join — the corpus is never re-shingled, re-hashed, or
     shuffled, and with the index stored bucketed by (band_idx, band_sig)
-    only matching buckets are even read. This is the foreachBatch body of
-    the streaming dedup job (streaming/jobs.py::incremental_dedup_batch).
-
-    ``new_bands`` (r12 optimization): a caller that ALSO needs the
-    batch's band table (the curation capstone appends the survivors'
-    bands to the persisted index) passes ``minhash_band_index(new_docs)``
-    here, already persisted, so the shingle → 32-min-hash → band
-    projection runs once per batch instead of once per consumer. The
-    caller owns that persist; this function only unpersists the band
-    table it built itself. Must be the same (id, band_idx, band_sig)
-    layout and hash family as the internal build.
+    only matching buckets are even read. This is the stage-2 body of the
+    streaming dedup loops (streaming/jobs.py::_dedup_epoch).
     """
-    owns_bands = new_bands is None
-    if not owns_bands:
-        # Contract enforcement (r13, ADVICE r12): the banding parameters are
-        # IGNORED when the caller supplies a precomputed band table — a
-        # mismatched (params, new_bands) pair would silently produce wrong
-        # dedup results. Reject non-default banding params, and require the
-        # exact (id, band_idx, band_sig) layout the internal build produces.
-        if (n, num_hashes, bands, seed, hash_family) != (3, 32, 8, 42, "xxhash64"):
-            raise ValueError(
-                "incremental_neardup_filter: banding parameters are ignored "
-                "when new_bands is supplied — band with those parameters "
-                "yourself and pass only new_bands"
-            )
-        missing = {id_col, "band_idx", "band_sig"} - set(new_bands.columns)
-        if missing:
-            raise ValueError(
-                f"incremental_neardup_filter: new_bands lacks columns {sorted(missing)}"
-            )
-    if owns_bands:
-        new_bands = minhash_band_index(
-            new_docs,
-            id_col,
-            text_col,
-            n=n,
-            num_hashes=num_hashes,
-            bands=bands,
-            seed=seed,
-            hash_family=hash_family,
-        ).persist()
-    try:
-        probe = new_bands.select(
-            "band_idx", "band_sig", F.col(id_col).alias("_new_id")
-        )
-        hit_corpus = (
-            index.join(F.broadcast(probe), ["band_idx", "band_sig"])
-            .select(F.col("_new_id").alias(id_col))
-            .distinct()
-        )
-        hit_batch = (
-            new_bands.alias("a")
-            .join(
-                new_bands.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_sig") == F.col("b.band_sig"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(F.col(f"b.{id_col}").alias(id_col))
-            .distinct()
-        )
-        # Eagerly materialize the (tiny, <= batch-size) hit-id set so the
-        # cached band table is consumed exactly once and can be released
-        # HERE instead of leaking in executor storage for the life of the
-        # long-running ingest loop (localCheckpoint truncates lineage, so
-        # the returned plan no longer references new_bands).
-        hits = hit_corpus.unionByName(hit_batch).distinct().localCheckpoint(eager=True)
-    finally:
-        if owns_bands:
-            new_bands.unpersist()
+    probe = new_bands.select("band_idx", "band_sig", F.col(id_col).alias("_new_id"))
+    hit_corpus = (
+        index.join(F.broadcast(probe), ["band_idx", "band_sig"])
+        .select(F.col("_new_id").alias(id_col))
+        .distinct()
+    )
+    hit_batch = (
+        _band_self_join(new_bands, new_bands, id_col)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
+    # Eagerly materialize the (tiny, <= batch-size) hit-id set so the
+    # returned plan no longer references ``new_bands`` (localCheckpoint
+    # truncates lineage): the caller can release its band table as soon
+    # as this returns instead of holding it in executor storage for the
+    # life of a long-running ingest loop.
+    hits = hit_corpus.unionByName(hit_batch).distinct().localCheckpoint(eager=True)
     return new_docs.join(hits, id_col, "left_anti")
 
 

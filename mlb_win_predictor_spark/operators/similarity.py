@@ -790,11 +790,12 @@ def semantic_dedup(
     # - the UDF assign pass inherits the scan's splits; a single-row-
     #   group parquet would pin it to 1 task, so fan out first (no-op
     #   when the scan is already split — the 100 TB case).
+    from ..session import fan_out
+
     par = spark.sparkContext.defaultParallelism
-    if c.rdd.getNumPartitions() < par:
-        c = c.repartition(par)
     assigned = (
-        c.select("vid", "vec", _assign(F.col("vec")).alias("cell"))
+        fan_out(c)
+        .select("vid", "vec", _assign(F.col("vec")).alias("cell"))
         .withColumn("nrm", F.sqrt(_dot(F.col("vec"), F.col("vec"))))
         .repartition(par, "cell")
     )

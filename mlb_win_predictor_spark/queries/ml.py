@@ -594,7 +594,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.pmod(F.col("doc_id"), F.lit(10)) == 0
     corpus_index = minhash_band_index(docs.filter(~is_new), hash_family="md5")
     batch = docs.filter(is_new)
-    kept = incremental_neardup_filter(corpus_index, batch, hash_family="md5")
+    bands = minhash_band_index(batch, hash_family="md5").persist()
+    try:
+        kept = incremental_neardup_filter(corpus_index, batch, bands)
+    finally:
+        bands.unpersist()
     return batch.select(F.count(F.lit(1)).alias("n_batch")).join(
         F.broadcast(
             kept.select(

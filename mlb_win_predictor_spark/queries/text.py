@@ -2754,11 +2754,11 @@ def llm_dataset_pipeline_stream(
     epochs.
 
     Stage semantics are the batch entries' own code shared by call:
-    ``llm_quality_expr`` (stage 1), ``incremental_neardup_filter`` /
-    ``minhash_band_index`` (stage 2 — the ``incremental_dedup_stream``
-    loop), ``_bloom_clean_docs`` (stage 3 — the ``decontaminate_stream``
-    gate), arrival-ordered budget (stage 4; the batch capstones, holding
-    the whole corpus, can order by global hash / DSIR weight instead).
+    ``llm_quality_expr`` (stage 1), ``_dedup_epoch`` (stage 2 — the
+    ``incremental_dedup_stream`` loop), ``_bloom_clean_docs`` (stage 3 —
+    the ``decontaminate_stream`` gate), arrival-ordered budget (stage 4;
+    the batch capstones, holding the whole corpus, can order by global
+    hash / DSIR weight instead).
     Dedup here is banding-only (the incremental index probe) and
     decontamination is Bloom-FPR-bounded, so counts are NOT expected to
     hash-match the exact batch entry — the multi-epoch==single-epoch,

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -326,30 +327,49 @@ def incremental_dedup_stream(
     duplicates, with no marker race window. Readers take the union of
     committed epochs (``read_epoch_union``), which IS append semantics,
     just commit-aware."""
-    from ..operators.dedup import incremental_neardup_filter, minhash_band_index
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        index = read_epoch_union(
-            spark,
-            index_path,
-            "doc_id long, band_idx int, band_sig long",
-            below=epoch_id,
-        )
-        kept = incremental_neardup_filter(index, batch).persist()
-        try:
-            minhash_band_index(kept).write.mode("overwrite").parquet(
-                f"{index_path}/epoch={epoch_id}"
-            )
+        with _dedup_epoch(batch, index_path, epoch_id) as kept:
             kept.write.mode("overwrite").parquet(f"{kept_path}/epoch={epoch_id}")
-        finally:
-            kept.unpersist()
 
     return (
         new_docs.writeStream.foreachBatch(dedup_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
+
+
+@contextmanager
+def _dedup_epoch(docs: DataFrame, index_path: str, epoch_id: int):
+    """The near-dedup step of one streaming epoch, shared by
+    ``incremental_dedup_stream`` and ``llm_curation_stream``: filter
+    ``docs`` against the band index of the committed epochs BELOW
+    ``epoch_id`` and against earlier docs of the same batch, overwrite
+    ``index_path/epoch=N`` with the survivors' bands, and yield the
+    persisted survivors. The batch is banded once: the survivors' bands
+    are that table semi-joined to the kept ids (re-banding them from text
+    measured ~6-22 s per epoch at sf0.1). Both persists are released on
+    exit, exception or not."""
+    from ..operators.dedup import incremental_neardup_filter, minhash_band_index
+
+    index = read_epoch_union(
+        docs.sparkSession,
+        index_path,
+        "doc_id long, band_idx int, band_sig long",
+        below=epoch_id,
+    )
+    bands = minhash_band_index(docs).persist()
+    kept = None
+    try:
+        kept = incremental_neardup_filter(index, docs, bands).persist()
+        bands.join(kept.select("doc_id"), "doc_id", "leftsemi").write.mode(
+            "overwrite"
+        ).parquet(f"{index_path}/epoch={epoch_id}")
+        yield kept
+    finally:
+        bands.unpersist()
+        if kept is not None:
+            kept.unpersist()
 
 
 def decontaminate_stream(
@@ -446,8 +466,8 @@ def llm_curation_stream(
        persisted MinHash band index of everything kept by EARLIER
        epochs (``operators.dedup.incremental_neardup_filter``: batch
        bands broadcast, corpus never re-shingled), then their bands are
-       appended so later batches dedup against them — exactly
-       ``incremental_dedup_stream``'s loop;
+       appended so later batches dedup against them — the
+       ``_dedup_epoch`` step ``incremental_dedup_stream`` runs too;
     3. **Bloom decontamination** — ``_bloom_clean_docs`` zero-hit keep
        against the broadcast bench-gram bitset (exactly
        ``decontaminate_stream``'s gate);
@@ -506,7 +526,6 @@ def llm_curation_stream(
     bucketed-by-(band_idx, band_sig) layout prunes to matching buckets."""
     from ..functions.scalars import stable_round
     from ..operators import dsir
-    from ..operators.dedup import incremental_neardup_filter, minhash_band_index
     from ..queries.text import llm_quality_expr
 
     lr = dsir.lr_literal(dsir_model[0]) if dsir_model is not None else None
@@ -527,154 +546,128 @@ def llm_curation_stream(
         # orders — PLANS.md r12) — serializing token arrays into the
         # persist costs more than one regex split over the clean subset,
         # the same result as the batch ``toked``-cache A/B.
-        # ONE materialized copy of the flagged batch (r12 optimization):
+        # ONE materialized copy of the flagged batch:
         # quality (→ banding AND the dedup anti-join) and the stats
         # rollup each re-evaluated the scan + token split + quality
         # expressions — three corpus-grain passes per epoch for one
         # micro-batch of data. Batch-sized by construction, so the
         # persist is bounded exactly like ``deduped``/``selected``.
-        flagged = bands_q = deduped = clean = selected = None
+        flagged = clean = selected = None
         try:
             flagged = toked.select(
                 "doc_id", "source", "text", n_tok.cast("long").alias("n_toks"), q.alias("q")
             ).persist()
             quality = flagged.filter("q").drop("q")
+            with _dedup_epoch(quality, index_path, epoch_id) as deduped:
+                # Persist the Bloom-clean survivors: the DSIR weighting, the
+                # budget window, and the stats rollup each consume ``clean``
+                # — without it the gram explode + ArrowEval Bloom probe chain
+                # re-runs up to three times per epoch.
+                clean = _bloom_clean_docs(deduped, bits_broadcast, gram_n).persist()
 
-            index = read_epoch_union(
-                spark,
-                index_path,
-                "doc_id long, band_idx int, band_sig long",
-                below=epoch_id,
-            )
-            # Band the quality batch ONCE (r12 optimization): the probe
-            # inside ``incremental_neardup_filter`` and the index append
-            # below both need the batch's band table, and the old shape ran
-            # the shingle → 32-min-hash → band projection twice per epoch
-            # (the append re-banded the survivors from text — measured ~6-22s
-            # of pure recompute per epoch at sf0.1). The banding is
-            # deterministic per doc, so the survivors' bands are exactly the
-            # quality bands semi-joined to the surviving ids.
-            bands_q = minhash_band_index(quality).persist()
-            deduped = incremental_neardup_filter(
-                index, quality, new_bands=bands_q
-            ).persist()
-            # Persist the Bloom-clean survivors (r12 optimization): the DSIR
-            # weighting, the budget window, and the stats rollup each
-            # consumed ``clean`` — re-running the gram explode + ArrowEval
-            # Bloom probe chain up to three times per epoch.
-            clean = _bloom_clean_docs(deduped, bits_broadcast, gram_n).persist()
-
-            spent = read_epoch_union(
-                spark,
-                stats_path,
-                "source string, n_input long, n_quality long, n_dedup long, "
-                "n_clean long, n_final long, tokens_clean long, tokens_final long",
-                below=epoch_id,
-            )
-            # cumulative CLEAN tokens, not admitted tokens: the batch cum
-            # charges every clean doc, so the stream must too (see docstring)
-            prior = spent.groupBy("source").agg(
-                F.sum("tokens_clean").alias("_spent_before")
-            )
-            if dsir_model is not None:
-                # DSIR within-epoch spending order: the epoch's clean docs
-                # scored against the literal bucket model with batch v3's
-                # arithmetic (6dp-rounded total log-weight, ordered per
-                # token, doc_id tiebreak; LEFT join + sentinel so a
-                # token-less doc still sorts deterministically last)
-                kc = dsir.bucket_counts(
-                    clean, F.split(F.trim(F.col("text")), r"\s+"), "doc_id"
+                spent = read_epoch_union(
+                    spark,
+                    stats_path,
+                    "source string, n_input long, n_quality long, n_dedup long, "
+                    "n_clean long, n_final long, tokens_clean long, tokens_final long",
+                    below=epoch_id,
                 )
-                wts = dsir.log_weights(kc, lr, dsir_model[1]).select(
-                    "doc_id", stable_round(F.col("log_weight"), 6).alias("_lw")
+                # cumulative CLEAN tokens, not admitted tokens: the batch cum
+                # charges every clean doc, so the stream must too (see docstring)
+                prior = spent.groupBy("source").agg(
+                    F.sum("tokens_clean").alias("_spent_before")
                 )
-                spend_base = clean.join(wts, "doc_id", "left")
-                spend_order = [
-                    F.coalesce(
-                        F.col("_lw") / F.col("n_toks").cast("double"), F.lit(-1e300)
-                    ).desc(),
-                    F.col("doc_id").asc(),
-                ]
-            else:
-                spend_base = clean
-                spend_order = [F.col("doc_id").asc()]
-            wb = (
-                W.partitionBy("source")
-                .orderBy(*spend_order)
-                .rowsBetween(W.unboundedPreceding, 0)
-            )
-            selected = (
-                spend_base.withColumn("_cum", F.sum("n_toks").over(wb))
-                .join(F.broadcast(prior), "source", "left")
-                .filter(
-                    F.coalesce(F.col("_spent_before"), F.lit(0)) + F.col("_cum")
-                    <= F.lit(int(budget_per_source))
+                if dsir_model is not None:
+                    # DSIR within-epoch spending order: the epoch's clean docs
+                    # scored against the literal bucket model with batch v3's
+                    # arithmetic (6dp-rounded total log-weight, ordered per
+                    # token, doc_id tiebreak; LEFT join + sentinel so a
+                    # token-less doc still sorts deterministically last)
+                    kc = dsir.bucket_counts(
+                        clean, F.split(F.trim(F.col("text")), r"\s+"), "doc_id"
+                    )
+                    wts = dsir.log_weights(kc, lr, dsir_model[1]).select(
+                        "doc_id", stable_round(F.col("log_weight"), 6).alias("_lw")
+                    )
+                    spend_base = clean.join(wts, "doc_id", "left")
+                    spend_order = [
+                        F.coalesce(
+                            F.col("_lw") / F.col("n_toks").cast("double"), F.lit(-1e300)
+                        ).desc(),
+                        F.col("doc_id").asc(),
+                    ]
+                else:
+                    spend_base = clean
+                    spend_order = [F.col("doc_id").asc()]
+                wb = (
+                    W.partitionBy("source")
+                    .orderBy(*spend_order)
+                    .rowsBetween(W.unboundedPreceding, 0)
                 )
-                .select("doc_id", "source", "text", "n_toks")
-                .persist()
-            )
-            # per-epoch writes, all overwrite — idempotent on replay.
-            # Survivor bands = the already-computed quality bands
-            # restricted to surviving ids (banding is deterministic per
-            # row), NOT a re-banding of the survivors from text.
-            bands_q.join(
-                deduped.select("doc_id"), "doc_id", "leftsemi"
-            ).write.mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
-            stats = (
-                flagged.groupBy("source")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_input"),
-                    F.sum(F.col("q").cast("long")).cast("long").alias("n_quality"),
+                selected = (
+                    spend_base.withColumn("_cum", F.sum("n_toks").over(wb))
+                    .join(F.broadcast(prior), "source", "left")
+                    .filter(
+                        F.coalesce(F.col("_spent_before"), F.lit(0)) + F.col("_cum")
+                        <= F.lit(int(budget_per_source))
+                    )
+                    .select("doc_id", "source", "text", "n_toks")
+                    .persist()
                 )
-                .join(
-                    deduped.groupBy("source").agg(
-                        F.count(F.lit(1)).cast("long").alias("n_dedup")
-                    ),
-                    "source",
-                    "left",
+                # per-epoch writes, all overwrite — idempotent on replay
+                stats = (
+                    flagged.groupBy("source")
+                    .agg(
+                        F.count(F.lit(1)).cast("long").alias("n_input"),
+                        F.sum(F.col("q").cast("long")).cast("long").alias("n_quality"),
+                    )
+                    .join(
+                        deduped.groupBy("source").agg(
+                            F.count(F.lit(1)).cast("long").alias("n_dedup")
+                        ),
+                        "source",
+                        "left",
+                    )
+                    .join(
+                        clean.groupBy("source").agg(
+                            F.count(F.lit(1)).cast("long").alias("n_clean"),
+                            F.sum("n_toks").cast("long").alias("tokens_clean"),
+                        ),
+                        "source",
+                        "left",
+                    )
+                    .join(
+                        selected.groupBy("source").agg(
+                            F.count(F.lit(1)).cast("long").alias("n_final"),
+                            F.sum("n_toks").cast("long").alias("tokens_final"),
+                        ),
+                        "source",
+                        "left",
+                    )
+                    .select(
+                        "source",
+                        "n_input",
+                        "n_quality",
+                        *[
+                            F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
+                            for c in (
+                                "n_dedup",
+                                "n_clean",
+                                "n_final",
+                                "tokens_clean",
+                                "tokens_final",
+                            )
+                        ],
+                    )
                 )
-                .join(
-                    clean.groupBy("source").agg(
-                        F.count(F.lit(1)).cast("long").alias("n_clean"),
-                        F.sum("n_toks").cast("long").alias("tokens_clean"),
-                    ),
-                    "source",
-                    "left",
+                stats.write.mode("overwrite").parquet(f"{stats_path}/epoch={epoch_id}")
+                selected.write.mode("overwrite").parquet(
+                    f"{kept_path}/epoch={epoch_id}"
                 )
-                .join(
-                    selected.groupBy("source").agg(
-                        F.count(F.lit(1)).cast("long").alias("n_final"),
-                        F.sum("n_toks").cast("long").alias("tokens_final"),
-                    ),
-                    "source",
-                    "left",
-                )
-                .select(
-                    "source",
-                    "n_input",
-                    "n_quality",
-                    *[
-                        F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-                        for c in (
-                            "n_dedup",
-                            "n_clean",
-                            "n_final",
-                            "tokens_clean",
-                            "tokens_final",
-                        )
-                    ],
-                )
-            )
-            stats.write.mode("overwrite").parquet(f"{stats_path}/epoch={epoch_id}")
-            selected.write.mode("overwrite").parquet(
-                f"{kept_path}/epoch={epoch_id}"
-            )
         finally:
-            # unpersist-if-built (r13, ADVICE r12): an exception between a
-            # persist() and the terminal writes (e.g. in the eager
-            # localCheckpoint inside incremental_neardup_filter) must not
-            # leak cached blocks across epochs of a long-running stream.
-            for _df in (flagged, bands_q, deduped, clean, selected):
+            # released even on an exception: cached blocks must not leak
+            # across the epochs of a long-running stream
+            for _df in (flagged, clean, selected):
                 if _df is not None:
                     _df.unpersist()
 

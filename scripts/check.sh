@@ -3,6 +3,8 @@
 # driver simulation (default-conf session), and the benchmark.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# every test and every parity case, not the default smoke subset
+export SPARK_GRAFT_FULL_TESTS=1
 
 echo "== pytest (sf0.001) =="
 python -m pytest tests/ -q

@@ -120,6 +120,7 @@ PARITY_SMOKE = {
     "unigram_logprob_quality",
     "dedup_jaccard_prefix",
     "dedup_exact_end_to_end",
+    "dedup_incremental",
     "ngram_containment_banded",
     "llm_dataset_pipeline_neardup",
     "quantile_binning",

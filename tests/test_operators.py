@@ -160,9 +160,8 @@ def test_band_candidate_pairs_chunked_split_identical(spark, docs):
     cold+hot case; the default (1024) keeps everything cold. All three
     must agree pair-for-pair."""
     from mlb_win_predictor_spark.operators.dedup import (
-        _shingle_hash,
+        _hashed_shingles,
         band_candidate_pairs,
-        ngram_shingles,
     )
 
     base = docs.filter(F.col("doc_id") < 40).select("doc_id", "text")
@@ -173,12 +172,8 @@ def test_band_candidate_pairs_chunked_split_identical(spark, docs):
         .crossJoin(one)
     )
     corpus = base.unionByName(cluster.select("doc_id", "text"))
-    sh = ngram_shingles(corpus, "text", 3).select(
-        "doc_id",
-        F.transform("shingles", lambda s: _shingle_hash(s, "xxhash64")).alias(
-            "shingles"
-        ),
-    )
+    sh = _hashed_shingles(corpus, "doc_id", "text", 3, "xxhash64")
+
     def pairs_at(split: int | None) -> set:
         got = band_candidate_pairs(sh, band_split=split)
         return {(r.id_a, r.id_b) for r in got.collect()}
@@ -1231,55 +1226,64 @@ def test_incremental_neardup_filter_drops_copies_keeps_novel(spark, docs):
     )
 
     index = minhash_band_index(docs)
+
+    def keep(batch):
+        return incremental_neardup_filter(index, batch, minhash_band_index(batch))
+
     # exact copies of corpus docs under fresh ids -> every one dropped
     copies = docs.limit(20).select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
     )
-    assert incremental_neardup_filter(index, copies).count() == 0
+    assert keep(copies).count() == 0
     # novel docs with an out-of-vocab token stream -> every one kept
     novel = spark.createDataFrame(
         [(20_000_000 + i, " ".join(f"zq{i}x{j}" for j in range(30))) for i in range(5)],
         "doc_id long, text string",
     )
-    assert incremental_neardup_filter(index, novel).count() == 5
+    assert keep(novel).count() == 5
     # within-batch duplicate pair: the larger id of a planted copy is dropped
     batch = novel.unionByName(
         novel.limit(1).select((F.col("doc_id") + 99).alias("doc_id"), "text")
     )
-    kept = incremental_neardup_filter(index, batch)
+    kept = keep(batch)
     assert kept.count() == 5
     assert kept.filter(F.col("doc_id") == 20_000_099).count() == 0
 
 
-def test_incremental_neardup_filter_new_bands_contract(spark, docs):
-    """r13 (ADVICE r12): the banding parameters are silently IGNORED when a
-    caller supplies a precomputed ``new_bands`` table — a mismatched pair
-    would yield wrong dedup results with no error. Pin the guards: custom
-    banding params alongside new_bands raise, as does a band table missing
-    the (id, band_idx, band_sig) layout; the matching-layout path still
-    equals the self-banded result."""
-    import pytest
+def test_incremental_neardup_filter_empty_index_matches_band_pairs(spark, docs):
+    """With an empty index the filter's only rule is the in-batch band
+    self-join, so it must keep exactly the batch docs that are not the
+    ``id_b`` of any ``band_candidate_pairs`` pair over the same batch. A
+    band table without ``band_sig`` is rejected by Spark's analyzer."""
+    from pyspark.errors import AnalysisException
 
     from mlb_win_predictor_spark.operators.dedup import (
+        _hashed_shingles,
+        band_candidate_pairs,
         incremental_neardup_filter,
         minhash_band_index,
     )
 
-    index = minhash_band_index(docs)
-    copies = docs.limit(5).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
-    )
-    bands = minhash_band_index(copies)
-    # happy path: same result as letting the operator band internally
-    assert incremental_neardup_filter(index, copies, new_bands=bands).count() == 0
-    # non-default banding params with a precomputed table: refuse loudly
-    with pytest.raises(ValueError, match="banding parameters are ignored"):
-        incremental_neardup_filter(index, copies, bands=4, new_bands=bands)
-    # wrong layout (missing band_sig): refuse loudly
-    with pytest.raises(ValueError, match="lacks columns"):
-        incremental_neardup_filter(
-            index, copies, new_bands=bands.drop("band_sig")
+    base = docs.filter(F.col("doc_id") < 40).select("doc_id", "text")
+    batch = base.unionByName(
+        base.filter(F.col("doc_id") < 8).select(
+            (F.col("doc_id") + 500).alias("doc_id"), "text"
         )
+    )
+    empty = spark.createDataFrame([], "doc_id long, band_idx int, band_sig long")
+    bands = minhash_band_index(batch)
+    kept = {
+        r.doc_id for r in incremental_neardup_filter(empty, batch, bands).collect()
+    }
+    sh = _hashed_shingles(batch, "doc_id", "text", 3, "xxhash64")
+    pairs = band_candidate_pairs(sh).collect()
+    assert all(r.id_a < r.id_b for r in pairs)
+    dropped = {r.id_b for r in pairs}
+    assert {i + 500 for i in range(8)} <= dropped, "planted copies must collide"
+    assert set(range(8)) <= kept, "the smaller id of a planted pair survives"
+    assert kept == {r.doc_id for r in batch.collect()} - dropped
+    with pytest.raises(AnalysisException):
+        incremental_neardup_filter(empty, batch, bands.drop("band_sig"))
 
 
 def test_dense_global_index_is_dense_and_ordered(spark):

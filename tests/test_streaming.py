@@ -175,22 +175,11 @@ def test_incremental_dedup_stream_across_batches(spark, tmp_path):
     # crash-window replay: re-run epoch 1's body directly against the
     # committed state (as after a crash between its writes and the
     # checkpoint commit) — kept/index must be row-identical after
-    from mlb_win_predictor_spark.streaming.jobs import read_epoch_union
+    from mlb_win_predictor_spark.streaming.jobs import _dedup_epoch
 
     b1_df = spark.createDataFrame(b1)
-    from mlb_win_predictor_spark.operators.dedup import (
-        incremental_neardup_filter,
-        minhash_band_index,
-    )
-
-    idx_below = read_epoch_union(
-        spark, str(tmp_path / "index"), "doc_id long, band_idx int, band_sig long", below=1
-    )
-    kept_replay = incremental_neardup_filter(idx_below, b1_df)
-    minhash_band_index(kept_replay).write.mode("overwrite").parquet(
-        str(tmp_path / "index") + "/epoch=1"
-    )
-    kept_replay.write.mode("overwrite").parquet(str(tmp_path / "kept") + "/epoch=1")
+    with _dedup_epoch(b1_df, str(tmp_path / "index"), 1) as kept_replay:
+        kept_replay.write.mode("overwrite").parquet(f"{tmp_path}/kept/epoch=1")
     assert spark.read.parquet(str(tmp_path / "kept")).count() == kept_rows
     assert spark.read.parquet(str(tmp_path / "index")).count() == index_rows
     assert {r.doc_id for r in spark.read.parquet(str(tmp_path / "kept")).collect()} == kept
