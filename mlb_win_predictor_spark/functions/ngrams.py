@@ -1,16 +1,43 @@
-"""Shared word-n-gram expression builder.
+"""The word-token rule and the word-n-gram builder, shared by every
+text operator.
 
-One guarded, optimized implementation for every consumer — the text
-query family (``queries/text.py``), the MinHash/containment shingle
-builders (``operators/dedup.py``), and the streaming decontamination
-gate. History shows why it must be shared: the short-doc guard and the
-element_at 4x optimization each had to be hand-mirrored across two
-copies before this hoist.
+**Token rule.** A document's words are ``split(trim(text), WORD_SEP)``:
+``trim`` strips spaces only, then runs of whitespace separate tokens.
+It is the engine side of the DuckDB oracle's
+``regexp_split_to_array(TRIM(text), '\\s+')``, so oracle parity of every
+text, dedup, DSIR and curation entry rests on it. This module owns it;
+operators call ``word_tokens`` / ``word_tokens_or_empty`` and never spell
+the split out.
+
+**n-grams.** ``word_ngrams`` is the one guarded, optimized gram builder
+for the text query family (``queries/text.py``), the MinHash/containment
+shingle builders (``operators/dedup.py``) and the streaming
+decontamination gate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+WORD_SEP = r"\s+"
+
+
+def word_tokens(c: str):
+    """Token array of string column ``c`` under the oracle's rule; NULL
+    text gives a NULL array, as in DuckDB.
+
+    Inside a higher-order function (``word_ngrams``, ``transform``) the
+    tokens must come from their own projected column, never be passed
+    inline: the lambda runs interpreted, so an inline split is
+    re-evaluated per element."""
+    return F.split(F.trim(F.col(c)), WORD_SEP)
+
+
+def word_tokens_or_empty(c: str):
+    """``word_tokens`` with NULL text read as ``""`` (one empty token),
+    for operators whose oracle twin coalesces NULL text to empty. The
+    same projection rule holds inside higher-order functions."""
+    return F.split(F.trim(F.coalesce(F.col(c), F.lit(""))), WORD_SEP)
 
 
 def word_ngrams(toks, n: int):

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ngrams import word_tokens
+
 NUM_FEATURES = 1 << 12
 TRAIN_MOD = 10
 TRAIN_BUCKETS = 8  # pmod(xxhash64(doc_id), 10) < 8 → train; rest held out
@@ -68,7 +70,7 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.functions import vector_to_array
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     # isin = InSet hash probe per token (vs array_contains' linear walk)
     sw_frac = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))).cast(
         "double"
@@ -82,7 +84,7 @@ def quality_scores(docs: DataFrame) -> DataFrame:
         ),
     )
     feat = _featurize(labeled)
-    # maxIter 50→25 + tol 1e-4 (r9): a corpus FILTER does not need 1e-6
+    # maxIter 50→25 + tol 1e-4: a corpus FILTER does not need 1e-6
     # L-BFGS convergence — at sf1 the fit ran to the 44-iteration wall
     # with held-out accuracy identical (0.988) to the 25-iteration model,
     # and each iteration is a full treeAggregate pass over the train
@@ -96,7 +98,7 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     # uniform md5-derived hash (the balanced_mixture_sample discipline),
     # so membership is deterministic and layout-independent. min(1, ...)
     # means the gate is a no-op until the train pool outgrows the cap.
-    # The bound is EXPECTED, not hard (r10 advice): n_pool is the
+    # The bound is EXPECTED, not hard: n_pool is the
     # expected 80% split, and the hash gate keeps a binomial count
     # around TRAIN_CAP — the train set can run a few percent over. That
     # is fine for its purpose (L-BFGS cost constant in corpus size).

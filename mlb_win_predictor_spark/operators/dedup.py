@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.ngrams import word_ngrams
+from ..functions.ngrams import word_ngrams, word_tokens, word_tokens_or_empty
 from ..functions.scalars import md5_int60
 
 # Mersenne prime 2^31 - 1: the modulus of the portable affine MinHash
@@ -97,7 +97,7 @@ def ngram_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     ⟺ ``size(toks) >= n`` exactly: with ≥ n tokens the gram count is
     ``cnt − n + 1 ≥ 1``, and array_distinct never empties a non-empty
     array."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = word_tokens(text_col)
     staged = df.withColumn("_toks", toks).filter(F.size("_toks") >= n)
     return staged.withColumn(
         "shingles", F.array_distinct(word_ngrams(F.col("_toks"), n))
@@ -757,7 +757,7 @@ def simhash_buckets(
     long and shift amounts must be literals — pow(2, b) covers b <= 62
     exactly. Near-dup candidates share the ``band`` (or the full hash).
 
-    ``hash_family="md5"`` (r11): tokens hash through ``md5_int60`` and
+    ``hash_family="md5"``: tokens hash through ``md5_int60`` and
     the fingerprint is 60-bit — every step (distinct tokens, +1/−1
     integer votes, sign, bit-pack, leading-band shift) exact-integer
     and re-derivable in DuckDB, making ``dedup_simhash`` a full
@@ -769,10 +769,8 @@ def simhash_buckets(
     # engines: without it Spark's aggregate-over-NULL-array folds a NULL
     # doc to simhash=0/band=0 (counted) while the DuckDB dual's UNNEST
     # of a NULL token list emits zero rows (dropped) — a latent
-    # n_docs_total mismatch (r11 ADVICE).
-    toks = F.array_distinct(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    )
+    # n_docs_total mismatch.
+    toks = F.array_distinct(word_tokens_or_empty(text_col))
     hashes = F.transform(toks, lambda t: _token_hash(t, hash_family))
     bit_of = lambda h, b: F.when(  # noqa: E731
         h.bitwiseAND(F.pow(F.lit(2.0), b).cast("long")) != 0, F.lit(1)

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.ngrams import word_tokens
 from ..functions.scalars import stable_round
 from ..session import load_table
 from .base import QueryDef
@@ -217,7 +218,7 @@ def explode_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDTF surface (SURVEY §2.9): posexplode of document tokens —
     (doc_id, pos, token) rows, 1-based positions."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < EXPLODE_DOC_CAP)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     return d.select("doc_id", F.posexplode(toks).alias("pos", "token")).withColumn(
         "pos", F.col("pos") + 1
     )
@@ -685,7 +686,7 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, slice, contains, flatten-free sizes — the list-manipulation
     surface the dedup/text operators compose from."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    toks = F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.array_distinct(word_tokens("text"))
     common = F.array(F.lit("the"), F.lit("data"), F.lit("row"), F.lit("table"))
     return d.select(
         "doc_id",

@@ -20,6 +20,7 @@ from ..operators.dedup import (
     minhash_banded_pairs,
     simhash_buckets,
 )
+from ..functions.ngrams import word_tokens
 from ..functions.scalars import stable_round
 from ..operators.similarity import ann_topk_lsh, ivf_topk, pq_topk, semantic_dedup
 from ..session import load_table
@@ -547,13 +548,13 @@ def dedup_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shuffle shape: the component join touches only clustered docs
     (near-dup density, not the corpus); the histogram aggregates
-    cluster-count rows. FULL oracle since r11 (portable hash family +
+    cluster-count rows. FULL oracle (portable hash family +
     recursive-CTE components); the mass-conservation invariants stay
     pinned in tests/test_operators.py."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_banded_pairs(docs, jaccard_threshold=0.5, hash_family="md5")
     comps = components_from_pairs(pairs)
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.size(word_tokens("text"))
     clustered = docs.join(comps, docs["doc_id"] == comps["node"]).select(
         "component", "doc_id", toks.alias("n_toks")
     )
@@ -1100,7 +1101,7 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is partition-order independent; the total joins back via
     broadcast — no single-partition window."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.size(word_tokens("text"))
     per = d.groupBy("lang").agg(F.sum(toks.cast("long")).alias("n_tokens"))
     w = F.sqrt(F.col("n_tokens").cast("double")).cast("decimal(38,6)")
     weighted = per.select("lang", "n_tokens", w.alias("w"))

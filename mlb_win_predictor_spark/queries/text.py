@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.ngrams import word_ngrams
+from ..functions.ngrams import WORD_SEP, word_ngrams, word_tokens
 from ..functions.scalars import md5_int32, stable_round
 from ..operators import dsir
 from ..operators.dsir import DSIR_BUCKETS
@@ -38,7 +38,7 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (north-star text analysis): whitespace tokenization,
     char/token stats per document."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     return d.select(
         "doc_id",
         "lang",
@@ -62,7 +62,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio, type-token ratio — the survivorship heuristics of an LLM
     training-data pipeline, as pure column arithmetic."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     n_tok = F.size(toks)
     sw_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw_arr, t)))
@@ -127,7 +127,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan_out: the per-token rule arithmetic dwarfs row bytes and the
     testdata parquet reads as ~2 row groups (no-op at corpus scale)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     n_tok = F.size(toks)
     sw_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     sw_ratio = F.size(F.filter(toks, lambda t: F.array_contains(sw_arr, t))).cast(
@@ -235,7 +235,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     (compression). Map-only per-doc counts (both tokenizations are
     single-pass column expressions), one tiny agg keyed by lang."""
     d = load_table(spark, sf_dir, "documents")
-    ws = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    ws = F.size(word_tokens("text")).cast("long")
     bpe = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_PATTERN), 0)).cast(
         "long"
     )
@@ -293,7 +293,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes; the testdata parquet reads as ~2 row groups (no-op at
     corpus scale)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
 
     def _score(markers: tuple[str, ...]):
         arr = F.array(*[F.lit(m) for m in markers])
@@ -377,7 +377,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup key = (digest) — byte-identical across engines."""
     d = load_table(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.col("text")))
-    toks = F.split(norm, r"\s+")
+    toks = F.split(norm, WORD_SEP)
     return d.select(
         "doc_id",
         F.md5(norm.cast("binary")).alias("content_digest"),
@@ -407,7 +407,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < NGRAM_DOC_CAP)
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
+        .select("doc_id", word_tokens("text").alias("toks"))
         # short-doc drop on TOKEN count, below the gram projection — a
         # size(shingles) filter above it is pushed below the Project and
         # re-inlines split() into the interpreted gram lambda (see
@@ -417,7 +417,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shingles = d.select(
         "doc_id",
-        F.array_distinct(_word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
+        F.array_distinct(word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
     )
     # same shape as ngram_containment_pairs: ONE cached exploded table
     # carrying n_sh, hashed-long join keys (8-byte discipline, counts
@@ -497,7 +497,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < NGRAM_DOC_CAP)
-        .select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
+        .select("doc_id", word_tokens("text").alias("toks"))
         # short-doc drop on TOKEN count, below the gram projection — a
         # size(shingles) filter above it is pushed below the Project and
         # re-inlines split() into the interpreted gram lambda (see
@@ -507,7 +507,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shingles = d.select(
         "doc_id",
-        F.array_distinct(_word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
+        F.array_distinct(word_ngrams(F.col("toks"), NGRAM_N)).alias("shingles"),
     )
     # one exploded table carries the per-doc size with it, and the join
     # key is the xxhash64 of the shingle (the span-dedup family's 8-byte
@@ -787,7 +787,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard streaming-pack semantics. Parallel by lang (each group
     packs independently — no global sort); per-bin digest output."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    toks = F.size(word_tokens("text"))
     w = W.partitionBy("lang").orderBy(F.col("doc_id").asc())
     cum_before = F.coalesce(
         F.sum(toks).over(w.rowsBetween(W.unboundedPreceding, -1)), F.lit(0)
@@ -848,26 +848,25 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the point of declaring the pipeline as one plan instead of
     staging tables.
 
-    fan_out (r8): the quality gate's HOF filters + the chunk explode are
+    fan_out: the quality gate's HOF filters + the chunk explode are
     CPU-heavy per input row, and the bench corpus is a 1-row-group file
     — without the round-robin split the whole pipeline ran on one task
-    at sf1 (the 4.2× scaling cluster the r7 verdict flagged); a no-op on
-    an already-split scan, i.e. at 100 TB.
+    at sf1 (a 4.2× sf1 scaling ratio); a no-op on an already-split
+    scan, i.e. at 100 TB.
 
-    r9 (flattening the 3.84× sf1 ratio): every downstream stage needs
-    only the TOKEN COUNT, never the token array — so the tokenize
-    happens once, inside one projection whose outputs are the three
-    scalar gate stats + n_toks, and the token array dies before the
-    dedup exchange. The r8 shape re-split the text after the window
-    (a second full-corpus regex pass) and shipped every document column
-    through the dedup shuffle; now the exchange carries exactly
-    (lang, doc_id, text, n_toks) and the chunk explode carries two
-    ints."""
+    Every downstream stage needs only the TOKEN COUNT, never the token
+    array — so the tokenize happens once, inside one projection whose
+    outputs are the three scalar gate stats + n_toks, and the token
+    array dies before the dedup exchange (the sf1 ratio was 3.84× while
+    the text was re-split after the window, a second full-corpus regex
+    pass, and every document column crossed the dedup shuffle). The
+    exchange carries exactly (lang, doc_id, text, n_toks) and the chunk
+    explode carries two ints."""
     d = fan_out(load_table(spark, sf_dir, "documents"), min_bytes=2 << 20)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     # isin over the literal stopword set compiles to an InSet hash probe
     # per token — measured ~15% faster than array_contains' linear walk
-    # of a 10-element array literal (r9 A/B, identical counts)
+    # of a 10-element array literal (A/B, identical counts)
     stats = d.select(
         "lang",
         "doc_id",
@@ -1080,9 +1079,9 @@ def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens train too). Map-only BUT CPU-heavy per row (split + window
     slices + concat), so the scan is fanned out to cluster parallelism
     first — that repartition is then the only exchange and carries input
-    rows, not emitted chunks (r8; no-op on an already-split scan)."""
+    rows, not emitted chunks (no-op on an already-split scan)."""
     d = fan_out(load_table(spark, sf_dir, "documents"), min_bytes=2 << 20).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
+        "doc_id", word_tokens("text").alias("toks")
     )
     starts = F.sequence(F.lit(1), F.greatest(F.size("toks"), F.lit(1)), F.lit(CHUNK_STRIDE))
     return (
@@ -1118,12 +1117,6 @@ FROM s
 REP_N = 3
 
 
-# shared implementation (functions/ngrams.py) — the `_word_ngrams` name
-# is kept because the text family, tests, and streaming all import it
-# from here; the guard/optimization history lives on the shared helper.
-_word_ngrams = word_ngrams
-
-
 def ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition scoring (the Gopher-style
     duplicate-n-gram quality filter of an LLM data pipeline): fraction of
@@ -1131,11 +1124,11 @@ def ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entirely map-side — n-gram build, distinct, and the ratio are all
     array expressions; no shuffle at any scale. Tokens and grams are
     materialized in staged projections so each is computed once per row
-    (see _word_ngrams)."""
+    (see word_ngrams)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     staged = d.select("doc_id", "lang", toks.alias("toks")).select(
-        "doc_id", "lang", _word_ngrams(F.col("toks"), REP_N).alias("grams")
+        "doc_id", "lang", word_ngrams(F.col("toks"), REP_N).alias("grams")
     )
     n_grams = F.col("n_grams")
     n_dup = F.col("n_dup_grams")
@@ -1193,10 +1186,10 @@ def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     join: at 100 TB the corpus side streams map-only into a partial-agg
     groupBy."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     exploded = (
         d.select("doc_id", toks.alias("toks"))
-        .select("doc_id", _word_ngrams(F.col("toks"), DECON_N).alias("grams"))
+        .select("doc_id", word_ngrams(F.col("toks"), DECON_N).alias("grams"))
         .select(
             "doc_id",
             F.explode(
@@ -1251,13 +1244,13 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bloom import bloom_build, bloom_might_contain
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     # cached: the filter-build collect job and the final probe+re-check
     # job both read the gram table — without the cache each would pay
     # the shingle build again (8 bytes/gram, ~grams-per-doc × docs rows)
     exploded = (
         d.select("doc_id", toks.alias("toks"))
-        .select("doc_id", _word_ngrams(F.col("toks"), DECON_N).alias("grams"))
+        .select("doc_id", word_ngrams(F.col("toks"), DECON_N).alias("grams"))
         .select(
             "doc_id",
             F.explode(
@@ -1289,7 +1282,7 @@ def top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop docs whose most frequent {n}-gram covers too much of the text):
     per doc, the modal word {n}-gram and the fraction of the document's
     characters its occurrences account for. Gram build is map-side
-    (``_word_ngrams``); the mode is one (doc_id, gram) count — a
+    (``word_ngrams``); the mode is one (doc_id, gram) count — a
     partial-agg-friendly shuffle on the doc grain, never corpus-wide —
     and the per-doc argmax is ``max(struct(cnt, gram))`` — lexicographic
     struct order = count desc then gram desc tie-break — a second
@@ -1297,7 +1290,7 @@ def top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (A/B at sf0.1: 0.5s vs 1.4s). Both engines pick the same gram
     deterministically."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     # grams are exploded INLINE (explode fuses with the generator); an
     # intermediate `.select(grams)` projection materializes every gram
     # array before the Generate and measures ~6x slower in-session at
@@ -1308,7 +1301,7 @@ def top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_chars",
-            F.explode(_word_ngrams(F.col("toks"), TOPGRAM_N)).alias("gram"),
+            F.explode(word_ngrams(F.col("toks"), TOPGRAM_N)).alias("gram"),
         )
         .groupBy("doc_id", "n_chars", "gram")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -1413,10 +1406,10 @@ def crossdoc_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition = one gram's postings, bounded by corpus df); bloom-
     filtering df==1 grams remains the production trim."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     exploded = (
         d.select("doc_id", toks.alias("toks"))
-        .select("doc_id", _word_ngrams(F.col("toks"), CROSSDOC_N).alias("grams"))
+        .select("doc_id", word_ngrams(F.col("toks"), CROSSDOC_N).alias("grams"))
         .select(
             "doc_id",
             F.explode(
@@ -1499,15 +1492,15 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the jaccard values still hash-match the string-based DuckDB oracle).
     """
     d = fan_out(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
+        "doc_id", word_tokens("text").alias("toks")
     ).filter(F.size(F.col("toks")) >= PREFIX_N)
-    # staged projection (see _word_ngrams): tokens materialized once per
+    # staged projection (see word_ngrams): tokens materialized once per
     # row, never re-split per shingle inside the interpreted HOF lambda
     shingled = d.select(
         "doc_id",
         F.array_sort(
             F.array_distinct(
-                F.transform(_word_ngrams(F.col("toks"), PREFIX_N), lambda s: F.xxhash64(s))
+                F.transform(word_ngrams(F.col("toks"), PREFIX_N), lambda s: F.xxhash64(s))
             )
         ).alias("shingles"),
     )
@@ -1704,7 +1697,7 @@ def bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed textual order, so no float fold-order fuzz; the final score is
     rounded (ln() is libm on both engines)."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
+        "doc_id", word_tokens("text").alias("toks")
     )
     toked = d.select("doc_id", "toks", F.size("toks").alias("dl"))
     stats = toked.agg(
@@ -1775,7 +1768,7 @@ def word_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates; the explode form is kept here because it is the one whose
     intermediate (word counts) is reused by TF-IDF/BM25 upstream."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     wc = (
         d.select("doc_id", F.explode(toks).alias("word"))
         .groupBy("doc_id", "word")
@@ -1825,9 +1818,7 @@ def _pos_gram_table(spark: SparkSession, sf_dir: str):
     xxhash64 of the word-{n}-gram starting at 0-based ``pos`` — built
     map-side (transform over an index sequence), exploded once."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toked = d.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    toked = d.select("doc_id", word_tokens("text").alias("toks"))
     cnt = F.size("toks")
     pos_grams = F.when(
         cnt >= SPAN_N,
@@ -2055,14 +2046,14 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one-final-ln/divide discipline as ``word_entropy_quality``; 6dp
     rounding swallows the ~1e-12 fold-order fuzz of the double Σ.
 
-    The corpus is tokenized ONCE — structurally, not by exchange reuse
-    (r10): the r9 shape derived ``wc = sum(k) group by w`` and the
-    corpus total as separate BRANCHES off the per-doc counts ``dc``, so
-    the token-grain subtree (scan → split → explode → partial agg)
-    appeared three times in the plan — and Spark 4's AQE did NOT stage-
-    reuse them (profiled at 10× data: three 8 MB-shuffle-read stages,
-    22.2 s executor time vs 0.6 s at base; with AQE off the static plan
-    shows 4 ReusedExchange, with AQE on zero). Relying on optimizer
+    The corpus is tokenized ONCE — structurally, not by exchange reuse:
+    deriving ``wc = sum(k) group by w`` and the corpus total as separate
+    BRANCHES off the per-doc counts ``dc`` puts the token-grain subtree
+    (scan → split → explode → partial agg) in the plan three times — and
+    Spark 4's AQE does NOT stage-reuse them (profiled at 10× data:
+    three 8 MB-shuffle-read stages, 22.2 s executor time vs 0.6 s at
+    base; with AQE off the static plan shows 4 ReusedExchange, with AQE
+    on zero). Relying on optimizer
     reuse for the single most expensive pass at 100 TB is fragile, so
     the vocabulary count now rides a WINDOW over the dc exchange —
     ``c = sum(k) over (partition by w)`` — and the corpus total re-
@@ -2073,16 +2064,15 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``per_doc`` itself is still consumed TWICE (the n_total aggregate
     and the final select), and the same no-AQE-stage-reuse finding
-    applies to it — so it is pinned with a lazy ``localCheckpoint``
-    (r11, from r10 advice): the broadcast-total subquery job
-    materializes the doc-grain rows once, and the main stage reads the
-    checkpointed partitions instead of re-running the scan → explode →
-    window chain. Doc-grain rows are tiny relative to token grain, so
-    the pin costs one executor-local write of n_docs rows.
+    applies to it — so it is pinned with a lazy ``localCheckpoint``:
+    the broadcast-total subquery job materializes the doc-grain rows
+    once, and the main stage reads the checkpointed partitions instead
+    of re-running the scan → explode → window chain. Doc-grain rows are
+    tiny relative to token grain, so the pin costs one executor-local
+    write of n_docs rows.
 
-    SIZE-GATED (r12, r11 verdict #6): at sf0.1 the checkpoint write is
-    ~half the entry's wall (0.45 → 1.00 s) while the duplicated subtree
-    it avoids is cheap — the pin only pays for itself once the
+    SIZE-GATED: at sf0.1 the checkpoint write is ~half the entry's wall
+    (0.45 → 1.00 s) while the duplicated subtree it avoids is cheap — the pin only pays for itself once the
     tokenize → window chain dominates. Gate on the same input-size
     estimate ``fan_out`` uses (``session.input_bytes``): below
     ``_UNIGRAM_PIN_MIN_BYTES`` (4 MiB) of documents parquet, skip the
@@ -2097,9 +2087,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     No corpus-sized sort, no driver state."""
     raw = load_table(spark, sf_dir, "documents")
     d = fan_out(raw, min_bytes=2 << 20)
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
-    )
+    toks = d.select("doc_id", F.explode(word_tokens("text")).alias("w"))
     dc = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("k"))
     dcw = dc.withColumn("c", F.sum("k").over(W.partitionBy("w")))
     per_doc = dcw.groupBy("doc_id").agg(
@@ -2111,7 +2099,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin unless the input is KNOWN small: input_bytes returns -1 for
     # non-file sources, and an unknown size must default to pinning —
     # skipping on unknown would drop the pin exactly in the at-scale
-    # scenario it exists for (r12 review)
+    # scenario it exists for
     if not 0 <= input_bytes(raw) < _UNIGRAM_PIN_MIN_BYTES:
         per_doc = per_doc.localCheckpoint(eager=False)
     total = per_doc.agg(F.sum("n_tokens").cast("double").alias("n_total"))
@@ -2175,7 +2163,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.8-2.3s): materializing the ~(docs × distinct-buckets) row cache
     # costs more than recomputing a codegen'd split at bench scale. At
     # 100 TB, persist (or write) kc once so the corpus is tokenized once.
-    kc = _dsir_counts(d, F.split(F.trim(F.col("text")), r"\s+"))
+    kc = _dsir_counts(d, word_tokens("text"))
     model, norm = dsir.fit(kc)
     return dsir.log_weights(
         kc.filter(~F.col("is_target")).join(F.broadcast(model.select("b", "lr")), "b"),
@@ -2247,7 +2235,7 @@ def dsir_bucket_model(
     trains on the non-bench slice, so the eval slice cannot influence
     selection)."""
     d = docs if docs is not None else load_table(spark, sf_dir, "documents")
-    model, norm = dsir.fit(_dsir_counts(d, F.split(F.trim(F.col("text")), r"\s+")))
+    model, norm = dsir.fit(_dsir_counts(d, word_tokens("text")))
     # one job: the norm side reuses the model's exchange
     rows = model.select("b", "lr").crossJoin(F.broadcast(norm)).collect()
     # an empty corpus fits no bucket; its norm is ln(B) − ln(B) = 0
@@ -2364,9 +2352,7 @@ def _llm_pipe_base(spark: SparkSession, sf_dir: str):
     variant so "same stage" is true by construction, not by copy.
     Returns (toked, flagged, is_bench)."""
     d = load_table(spark, sf_dir, "documents")
-    toked = d.select(
-        "doc_id", "source", "text", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    toked = d.select("doc_id", "source", "text", word_tokens("text").alias("toks"))
     is_bench = F.pmod(F.col("doc_id"), F.lit(LLM_PIPE_BENCH_MOD)) == 0
     corpus = toked.filter(~is_bench)
     n_tok, q = llm_quality_expr(F.col("toks"))
@@ -2403,7 +2389,7 @@ def _llm_pipe_finish(
         "doc_id",
         F.explode(
             F.array_distinct(
-                F.transform(_word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
+                F.transform(word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
             )
         ).alias("gram"),
     )
@@ -2743,7 +2729,7 @@ FROM b GROUP BY source
 def llm_dataset_pipeline_stream(
     spark: SparkSession, sf_dir: str, dsir: bool = False
 ) -> DataFrame:
-    """Capstone, STREAMING form (r11, r10 verdict #5): the incremental
+    """Capstone, STREAMING form: the incremental
     curation pipeline a 100 TB ingest actually runs — quality gate →
     incremental near-dedup against the persisted MinHash band index →
     Bloom benchmark decontamination → per-source token budget — executed
@@ -2767,7 +2753,7 @@ def llm_dataset_pipeline_stream(
 
     Rows-only entry (a streaming query with external table state has no
     DuckDB dual). State/checkpoint live in a fresh mkdtemp per call and
-    are DELETED before returning (r11 review: the kept-corpus copy +
+    are DELETED before returning (the kept-corpus copy +
     band index + checkpoint are corpus-sized — leaking one per bench/
     correctness invocation accumulates unboundedly in /tmp); the final
     rollup is collected first (bounded: one row per source per epoch)
@@ -2783,20 +2769,20 @@ def llm_dataset_pipeline_stream(
     is_bench = F.pmod(F.col("doc_id"), F.lit(LLM_PIPE_BENCH_MOD)) == 0
     bench_grams = (
         d.filter(is_bench)
-        .select(F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
+        .select(word_tokens("text").alias("toks"))
         .select(
             F.explode(
                 F.array_distinct(
-                    F.transform(_word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
+                    F.transform(word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
                 )
             ).alias("gram")
         )
         .distinct()
     )
-    # DSIR variant (r12): train the bucket model batch-side on the
+    # DSIR variant: train the bucket model batch-side on the
     # NON-BENCH corpus (v3's eval-must-not-influence-selection rule) and
     # hand it to the stream as a 2-KB literal. Trained BEFORE any scratch
-    # state is allocated (r12 review: a training failure after mkdtemp /
+    # state is allocated (a training failure after mkdtemp /
     # broadcast would leak both — the cleanup sits in the finally below).
     model = (
         dsir_bucket_model(spark, sf_dir, docs=d.filter(~is_bench)) if dsir else None
@@ -2859,7 +2845,7 @@ def llm_dataset_pipeline_stream(
         # unpersist only drops executor copies — the driver-held value
         # and the on-disk broadcast artifact survive until destroy, so
         # repeated invocations would still accumulate driver state
-        # (r11 advice + r12 review). bits is never used after this.
+        # bits is never used after this.
         bits.destroy()
         shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
@@ -2900,7 +2886,7 @@ def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise each re-run the corpus token explode (same rule as
     # ccnet_perplexity_buckets / rfm_segments)
     wc = (
-        d.select(F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"))
+        d.select(F.explode(word_tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     ).cache()
@@ -3032,13 +3018,13 @@ def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Repetitive boilerplate scores LOW (its transitions dominate the
     corpus); incoherent token soup scores HIGH.
 
-    Plan (r10, the unigram tokenize-once lesson): bigrams are built
+    Plan (the unigram tokenize-once lesson): bigrams are built
     MAP-SIDE from each doc's token array (transform over an index
     sequence — no window, no positions shuffle), then the corpus bigram
     and context counts ride WINDOWS over the per-doc agg —
     ``c_bi = sum(k) over (partition by bi)`` and
     ``c_ctx = sum(k) over (partition by ctx)`` — instead of branch
-    aggregations joined back: the r9 shape's doc_bi subtree appeared
+    aggregations joined back: with branches the doc_bi subtree appears
     three times in the plan (corpus_bi source, ctx source via corpus_bi,
     and the final join's left side) and Spark 4's AQE does not
     stage-reuse duplicated subtrees, so the corpus was re-tokenized per
@@ -3050,9 +3036,7 @@ def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the materialized array. Inlining the split into the transform
     # lambda re-evaluates the regex split per array element — O(n²)
     # tokenization per doc (measured 4x on this entry at sf0.1).
-    toked = d.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    toked = d.select("doc_id", word_tokens("text").alias("toks"))
     toks = F.col("toks")
     # every shuffle below is keyed on xxhash64 LONGS, not (u,w) string
     # pairs — the span-dedup family's 8-byte-key discipline (collision
@@ -3117,9 +3101,7 @@ def _interpolated_logprob(
     (the reduction-test configuration, where every scored event is in
     the model and the floor provably never binds)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toked = d.select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    toked = d.select("doc_id", word_tokens("text").alias("toks"))
     train = toked.filter(F.col("doc_id") % 2 == 0) if split else toked
     score = toked.filter(F.col("doc_id") % 2 == 1) if split else toked
     toks = F.col("toks")
@@ -3300,7 +3282,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = d.select(
         "doc_id",
         "source",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_toks"),
+        F.size(word_tokens("text")).cast("long").alias("n_toks"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
     w = (
@@ -3366,15 +3348,13 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup key (src_a, src_b) is domain-bounded. Measured vs the
     distinct+self-join plan: 1.46s -> ~0.9s at sf0.1."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    toked = d.select(
-        "source", F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    toked = d.select("source", word_tokens("text").alias("toks"))
     e = toked.select(
         "source",
         F.explode(
             F.array_distinct(
                 F.transform(
-                    _word_ngrams(F.col("toks"), CROSSDOC_N),
+                    word_ngrams(F.col("toks"), CROSSDOC_N),
                     lambda g: F.xxhash64(g),
                 )
             )

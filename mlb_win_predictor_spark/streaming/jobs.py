@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from ..functions.ngrams import word_ngrams, word_tokens
+
 def _event_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -305,6 +307,17 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
+def _available_now(df: DataFrame, fn, checkpoint: str):
+    """The unstarted availableNow writer of a foreachBatch job: drains
+    ``df``'s backlog through ``fn(batch, epoch_id)`` and stops.
+    ``checkpoint`` holds the offsets that make a restart resume."""
+    return (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+
+
 def incremental_dedup_stream(
     new_docs: DataFrame, index_path: str, kept_path: str, checkpoint: str
 ):
@@ -332,11 +345,7 @@ def incremental_dedup_stream(
         with _dedup_epoch(batch, index_path, epoch_id) as kept:
             kept.write.mode("overwrite").parquet(f"{kept_path}/epoch={epoch_id}")
 
-    return (
-        new_docs.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(new_docs, dedup_batch, checkpoint)
 
 
 @contextmanager
@@ -402,11 +411,7 @@ def decontaminate_stream(
         kept = _bloom_clean_docs(batch, bits_broadcast, n).select("doc_id", "text")
         kept.write.mode("overwrite").parquet(f"{kept_path}/epoch={epoch_id}")
 
-    return (
-        new_docs.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(new_docs, gate, checkpoint)
 
 
 def _bloom_clean_docs(batch: DataFrame, bits_broadcast, n: int) -> DataFrame:
@@ -421,14 +426,13 @@ def _bloom_clean_docs(batch: DataFrame, bits_broadcast, n: int) -> DataFrame:
     sub-n-token doc would reach the UDF. Docs with no grams have nothing
     to probe and are kept via the left join's coalesce."""
     from ..operators.bloom import bloom_might_contain
-    from ..queries.text import _word_ngrams
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = word_tokens("text")
     grams = batch.select("doc_id", toks.alias("toks")).select(
         "doc_id",
         F.explode(
             F.array_distinct(
-                F.transform(_word_ngrams(F.col("toks"), n), lambda g: F.xxhash64(g))
+                F.transform(word_ngrams(F.col("toks"), n), lambda g: F.xxhash64(g))
             )
         ).alias("gram"),
     )
@@ -480,9 +484,8 @@ def llm_curation_stream(
        (``tokens_clean`` in the stats table), NOT admitted tokens —
        carrying only admitted tokens would un-charge every
        budget-rejected doc at each epoch boundary, making the kept set
-       depend on micro-batch boundaries (caught by this round's
-       review; pinned by the over-budget-then-epoch-boundary case in
-       tests/test_streaming.py). Arrival order is the production
+       depend on micro-batch boundaries (pinned by the
+       over-budget-then-epoch-boundary case in tests/test_streaming.py). Arrival order is the production
        semantics — a 100 TB ingest stops admitting a source when its
        budget fills — where the BATCH capstone, holding the whole
        corpus, can afford a global md5-hash (v1) or DSIR (v3) spending
@@ -536,14 +539,14 @@ def llm_curation_stream(
             "doc_id",
             "source",
             "text",
-            F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+            word_tokens("text").alias("toks"),
         )
         n_tok, q = llm_quality_expr(F.col("toks"))
         # ``toks`` is deliberately DROPPED here even though the DSIR
         # weighting stage below re-splits clean docs' text: carrying the
         # array through the persisted ``deduped`` frame measured 15-20%
         # SLOWER at sf0.1 (two interleaved single-JVM A/Bs, both leg
-        # orders — PLANS.md r12) — serializing token arrays into the
+        # orders) — serializing token arrays into the
         # persist costs more than one regex split over the clean subset,
         # the same result as the batch ``toked``-cache A/B.
         # ONE materialized copy of the flagged batch:
@@ -583,9 +586,7 @@ def llm_curation_stream(
                     # arithmetic (6dp-rounded total log-weight, ordered per
                     # token, doc_id tiebreak; LEFT join + sentinel so a
                     # token-less doc still sorts deterministically last)
-                    kc = dsir.bucket_counts(
-                        clean, F.split(F.trim(F.col("text")), r"\s+"), "doc_id"
-                    )
+                    kc = dsir.bucket_counts(clean, word_tokens("text"), "doc_id")
                     wts = dsir.log_weights(kc, lr, dsir_model[1]).select(
                         "doc_id", stable_round(F.col("log_weight"), 6).alias("_lw")
                     )
@@ -671,11 +672,7 @@ def llm_curation_stream(
                 if _df is not None:
                     _df.unpersist()
 
-    return (
-        new_docs.writeStream.foreachBatch(curate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(new_docs, curate, checkpoint)
 
 
 def dsir_select_stream(
@@ -713,7 +710,7 @@ def dsir_select_stream(
     lr = dsir.lr_literal(bucket_logratios)
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
-        kc = dsir.bucket_counts(batch, F.split(F.trim(F.col("text")), r"\s+"), "doc_id")
+        kc = dsir.bucket_counts(batch, word_tokens("text"), "doc_id")
         scored = dsir.log_weights(kc, lr, norm).select(
             "doc_id",
             (F.col("log_weight") / F.col("n_tokens").cast("double")).alias(
@@ -730,11 +727,7 @@ def dsir_select_stream(
         )
         kept.write.mode("overwrite").parquet(f"{kept_path}/epoch={epoch_id}")
 
-    return (
-        new_docs.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(new_docs, gate, checkpoint)
 
 
 def media_decode_stream(
@@ -819,11 +812,7 @@ def cms_sketch_stream(events: DataFrame, sketch_path: str, checkpoint: str, key:
     def sketch_batch(batch: DataFrame, epoch_id: int) -> None:
         _apply_versioned_epoch(cms_build(batch, key), epoch_id, sketch_path, cms_merge)
 
-    return (
-        events.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(events, sketch_batch, checkpoint)
 
 
 def incremental_rollup_stream(events: DataFrame, rollup_path: str, checkpoint: str):
@@ -851,11 +840,7 @@ def incremental_rollup_stream(events: DataFrame, rollup_path: str, checkpoint: s
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         apply_rollup_epoch(batch, epoch_id, rollup_path)
 
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(events, merge_batch, checkpoint)
 
 
 def apply_bitmap_epoch(batch: DataFrame, epoch_id: int, bitmap_path: str) -> None:
@@ -893,11 +878,7 @@ def incremental_bitmap_distinct_stream(
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         apply_bitmap_epoch(batch, epoch_id, bitmap_path)
 
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(events, merge_batch, checkpoint)
 
 
 def read_bitmap_distinct(spark, bitmap_path: str) -> DataFrame | None:
@@ -1017,11 +998,7 @@ def incremental_ann_index_stream(
     def index_batch(batch: DataFrame, epoch_id: int) -> None:
         apply_ann_index_epoch(batch, epoch_id, centroids_path, index_path)
 
-    return (
-        new_vectors.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(new_vectors, index_batch, checkpoint)
 
 
 def apply_ann_index_epoch(
@@ -1071,11 +1048,7 @@ def upsert_outcomes_foreach_batch(
         spark.read.parquet(tmp).write.mode("overwrite").parquet(games_path)
         shutil.rmtree(tmp, ignore_errors=True)
 
-    return (
-        updates.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(updates, merge_batch, checkpoint)
 
 
 def score_games_stream(
@@ -1115,8 +1088,4 @@ def score_games_stream(
             "overwrite"
         ).parquet(f"{predictions_path}/epoch={epoch_id}")
 
-    return (
-        prepared.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _available_now(prepared, score_batch, checkpoint)

@@ -99,7 +99,7 @@ sf0.1, interleaved in-session A/Bs so ambient load cancels):
    `array_join(slice(toks, i, n))`** inside the interpreted transform
    lambda — slice allocates an n-element array per gram. Bigram-build
    explode+count pipeline: 4.0s → 1.1s warm (same values byte-for-byte;
-   `_word_ngrams` now emits the probe form, every consumer inherits it).
+   `word_ngrams` now emits the probe form, every consumer inherits it).
 2. **Explode consumes the gram expression INLINE.** Staging the gram
    array in its own projection before `explode` adds a full-array
    materialization ahead of the Generate. Steady-state the gap is small

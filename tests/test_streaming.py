@@ -900,15 +900,15 @@ def _llm_curation_fixture_rows():
 
 def _llm_curation_bits(spark, bench_sent):
     from mlb_win_predictor_spark.operators.bloom import bloom_build
-    from mlb_win_predictor_spark.queries.text import _word_ngrams
+    from mlb_win_predictor_spark.functions.ngrams import word_ngrams, word_tokens
 
     bench = (
         spark.createDataFrame([(bench_sent,)], "text string")
-        .select(F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
+        .select(word_tokens("text").alias("toks"))
         .select(
             F.explode(
                 F.array_distinct(
-                    F.transform(_word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
+                    F.transform(word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
                 )
             ).alias("gram")
         )
