@@ -9,6 +9,13 @@ text, dedup, DSIR and curation entry rests on it. This module owns it;
 operators call ``word_tokens`` / ``word_tokens_or_empty`` and never spell
 the split out.
 
+``WORD_SEP`` spells out the oracle's class rather than writing ``\\s``:
+DuckDB's regexes are RE2, whose ``\\s`` is ``[\\t\\n\\f\\r ]``, while
+Spark's are ``java.util.regex``, whose ``\\s`` also matches vertical tab
+``\\x0b``. With ``\\s+`` Spark split ``'a\\x0bb'`` into two tokens where
+DuckDB keeps one. Neither engine's ``\\s`` matches NBSP or other Unicode
+spaces, and both ``TRIM``s strip only the space character.
+
 **n-grams.** ``word_ngrams`` is the one guarded, optimized gram builder
 for the text query family (``queries/text.py``), the MinHash/containment
 shingle builders (``operators/dedup.py``) and the streaming
@@ -19,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-WORD_SEP = r"\s+"
+WORD_SEP = r"[\t\n\f\r ]+"
 
 
 def word_tokens(c: str):

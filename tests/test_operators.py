@@ -1991,6 +1991,47 @@ def test_arrow_token_stats_matches_native_exprs(spark, docs):
     assert got == want
 
 
+def test_word_tokens_match_duckdb_split(spark):
+    """The word-token rule splits exactly like the DuckDB oracle's
+    ``regexp_split_to_array(TRIM(x), '\\s+')``, element for element, on
+    whitespace edge cases. ``\\x0b`` is the case that tells Java's ``\\s``
+    (which includes it) from RE2's ``[\\t\\n\\f\\r ]``; NBSP is in neither.
+    ``word_tokens_or_empty`` is checked against the same split of
+    ``COALESCE(x, '')``."""
+    import duckdb
+
+    from mlb_win_predictor_spark.functions.ngrams import (
+        word_tokens,
+        word_tokens_or_empty,
+    )
+
+    cases = [
+        None, "", "   ", "a b", "  a   b  ", "a\tb", "a\nb", "a\fb", "a\rb",
+        "a\xa0b", "\ta b\t", "a\x0bb",
+    ]
+    got = {
+        r.i: (r.toks, r.toks_or_empty)
+        for r in spark.createDataFrame(list(enumerate(cases)), "i int, x string")
+        .select(
+            "i",
+            word_tokens("x").alias("toks"),
+            word_tokens_or_empty("x").alias("toks_or_empty"),
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    want = {
+        i: con.execute(
+            "SELECT regexp_split_to_array(TRIM(?::VARCHAR), '\\s+'), "
+            "regexp_split_to_array(TRIM(COALESCE(?::VARCHAR, '')), '\\s+')",
+            [x, x],
+        ).fetchone()
+        for i, x in enumerate(cases)
+    }
+    bad = [(cases[i], got[i], want[i]) for i in want if got[i] != want[i]]
+    assert not bad, bad
+
+
 def test_dedup_cluster_profile_mass_conservation(spark, docs):
     """Cluster-profile invariants against the underlying components:
     every cluster has >= 2 docs (pairs built it), sum(size * n_clusters)
