@@ -98,10 +98,10 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     # uniform md5-derived hash (the balanced_mixture_sample discipline),
     # so membership is deterministic and layout-independent. min(1, ...)
     # means the gate is a no-op until the train pool outgrows the cap.
-    # The bound is EXPECTED, not hard: n_pool is the
-    # expected 80% split, and the hash gate keeps a binomial count
-    # around TRAIN_CAP — the train set can run a few percent over. That
-    # is fine for its purpose (L-BFGS cost constant in corpus size).
+    # The bound is EXPECTED, not hard: n_pool is the expected 80% split,
+    # and the hash gate keeps a binomial count around TRAIN_CAP — the
+    # train set can run a few percent over. That is fine for its purpose
+    # (L-BFGS cost constant in corpus size).
     from ..functions.scalars import md5_int32
 
     n_pool = docs.count() * TRAIN_BUCKETS / TRAIN_MOD

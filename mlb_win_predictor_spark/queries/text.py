@@ -851,7 +851,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan_out: the quality gate's HOF filters + the chunk explode are
     CPU-heavy per input row, and the bench corpus is a 1-row-group file
     — without the round-robin split the whole pipeline ran on one task
-    at sf1 (a 4.2× sf1 scaling ratio); a no-op on an already-split
+    at sf1 (a 4.2× scaling ratio); a no-op on an already-split
     scan, i.e. at 100 TB.
 
     Every downstream stage needs only the TOKEN COUNT, never the token
@@ -2072,8 +2072,9 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     write of n_docs rows.
 
     SIZE-GATED: at sf0.1 the checkpoint write is ~half the entry's wall
-    (0.45 → 1.00 s) while the duplicated subtree it avoids is cheap — the pin only pays for itself once the
-    tokenize → window chain dominates. Gate on the same input-size
+    (0.45 → 1.00 s) while the duplicated subtree it avoids is cheap —
+    the pin only pays for itself once the tokenize → window chain
+    dominates. Gate on the same input-size
     estimate ``fan_out`` uses (``session.input_bytes``): below
     ``_UNIGRAM_PIN_MIN_BYTES`` (4 MiB) of documents parquet, skip the
     pin (re-running the doc-grain subtree is cheaper); above it, pin

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions.ngrams import word_ngrams, word_tokens
 
+
 def _event_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -485,12 +486,12 @@ def llm_curation_stream(
        carrying only admitted tokens would un-charge every
        budget-rejected doc at each epoch boundary, making the kept set
        depend on micro-batch boundaries (pinned by the
-       over-budget-then-epoch-boundary case in tests/test_streaming.py). Arrival order is the production
-       semantics — a 100 TB ingest stops admitting a source when its
-       budget fills — where the BATCH capstone, holding the whole
-       corpus, can afford a global md5-hash (v1) or DSIR (v3) spending
-       order; the stream==batch parity test therefore feeds epochs in
-       doc_id order so both orders coincide.
+       over-budget-then-epoch-boundary case in tests/test_streaming.py).
+       Arrival order is the production semantics — a 100 TB ingest
+       stops admitting a source when its budget fills — where the BATCH
+       capstone, holding the whole corpus, can afford a global md5-hash
+       (v1) or DSIR (v3) spending order; the stream==batch parity test
+       therefore feeds epochs in doc_id order so both orders coincide.
 
        ``dsir_model=(bucket_logratios, norm)`` (from
        ``queries.text.dsir_bucket_model``) upgrades the WITHIN-EPOCH
@@ -546,9 +547,9 @@ def llm_curation_stream(
         # weighting stage below re-splits clean docs' text: carrying the
         # array through the persisted ``deduped`` frame measured 15-20%
         # SLOWER at sf0.1 (two interleaved single-JVM A/Bs, both leg
-        # orders) — serializing token arrays into the
-        # persist costs more than one regex split over the clean subset,
-        # the same result as the batch ``toked``-cache A/B.
+        # orders) — serializing token arrays into the persist costs more
+        # than one regex split over the clean subset, the same result as
+        # the batch ``toked``-cache A/B.
         # ONE materialized copy of the flagged batch:
         # quality (→ banding AND the dedup anti-join) and the stats
         # rollup each re-evaluated the scan + token split + quality
