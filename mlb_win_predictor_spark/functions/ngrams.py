@@ -19,11 +19,14 @@ spaces, and both ``TRIM``s strip only the space character.
 **n-grams.** ``word_ngrams`` is the one guarded, optimized gram builder
 for the text query family (``queries/text.py``), the MinHash/containment
 shingle builders (``operators/dedup.py``) and the streaming
-decontamination gate.
+decontamination gate. ``hashed_gram_set`` is the one rule that turns a
+doc's grams into the 64-bit keys the decontamination and Bloom operators
+compare.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 WORD_SEP = r"[\t\n\f\r ]+"
@@ -72,3 +75,22 @@ def word_ngrams(toks, n: int):
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+# gram length of benchmark decontamination: the batch exact join, the
+# Bloom bitset build and the streaming Bloom probe
+DECON_N = 5
+
+
+def hashed_gram_set(grams: Column) -> Column:
+    """A doc's distinct grams as xxhash64 longs:
+    ``array_distinct(transform(grams, xxhash64))``. Distinct-ing per doc
+    before any explode keeps document-frequency counts per document.
+
+    The Bloom bitset is built from these keys (``queries.text``) and
+    probed with them (``streaming.jobs._bloom_clean_docs``), so both
+    sides must call this helper: a probe hashed any other way never
+    matches and raises no error. ``grams`` is whatever gram column the
+    caller has, a staged ``grams`` projection or an inline
+    ``word_ngrams``; the two plan differently, so callers keep theirs."""
+    return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))

@@ -18,7 +18,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.ngrams import WORD_SEP, word_ngrams, word_tokens
+from ..functions.ngrams import (
+    DECON_N,
+    WORD_SEP,
+    hashed_gram_set,
+    word_ngrams,
+    word_tokens,
+)
 from ..functions.scalars import md5_int32, stable_round
 from ..operators import dsir
 from ..operators.dsir import DSIR_BUCKETS
@@ -1170,7 +1176,6 @@ FROM g
 """
 
 
-DECON_N = 5
 DECON_BENCH_MOD = 97
 
 
@@ -1192,9 +1197,7 @@ def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", word_ngrams(F.col("toks"), DECON_N).alias("grams"))
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-            ).alias("gram"),
+            F.explode(hashed_gram_set(F.col("grams"))).alias("gram"),
         )
     )
     is_bench = F.pmod(F.col("doc_id"), F.lit(DECON_BENCH_MOD)) == 0
@@ -1253,9 +1256,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", word_ngrams(F.col("toks"), DECON_N).alias("grams"))
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-            ).alias("gram"),
+            F.explode(hashed_gram_set(F.col("grams"))).alias("gram"),
         )
     ).cache()
     is_bench = F.pmod(F.col("doc_id"), F.lit(DECON_BENCH_MOD)) == 0
@@ -1412,9 +1413,7 @@ def crossdoc_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", word_ngrams(F.col("toks"), CROSSDOC_N).alias("grams"))
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
-            ).alias("gram"),
+            F.explode(hashed_gram_set(F.col("grams"))).alias("gram"),
         )
     )
     with_df = exploded.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("gram")))
@@ -1499,9 +1498,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = d.select(
         "doc_id",
         F.array_sort(
-            F.array_distinct(
-                F.transform(word_ngrams(F.col("toks"), PREFIX_N), lambda s: F.xxhash64(s))
-            )
+            hashed_gram_set(word_ngrams(F.col("toks"), PREFIX_N))
         ).alias("shingles"),
     )
     # Persist: reused by the df agg, the prefix index, and both sides of
@@ -2382,17 +2379,13 @@ def _llm_pipe_finish(
     rollup — ``stage_flags`` is the ordered (output name, flag column)
     list of upstream stages to count, so variants with extra stages get
     extra columns without touching the shared shuffle shape.
-    ``budget_order`` (r10, the DSIR capstone hook) maps the clean frame
+    ``budget_order`` (the DSIR capstone hook) maps the clean frame
     to ``(frame, order_cols)``, letting a variant join a per-doc ranking
     signal and spend each source's budget in that order; None keeps the
     deterministic md5-hash order (``token_budget_sample``'s rule)."""
     gram5 = lambda df: df.select(  # noqa: E731
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
-            )
-        ).alias("gram"),
+        F.explode(hashed_gram_set(word_ngrams(F.col("toks"), DECON_N))).alias("gram"),
     )
     bench_grams = gram5(toked.filter(is_bench)).select("gram").distinct()
     dirty = (
@@ -2773,9 +2766,7 @@ def llm_dataset_pipeline_stream(
         .select(word_tokens("text").alias("toks"))
         .select(
             F.explode(
-                F.array_distinct(
-                    F.transform(word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
-                )
+                hashed_gram_set(word_ngrams(F.col("toks"), DECON_N))
             ).alias("gram")
         )
         .distinct()
@@ -2801,11 +2792,9 @@ def llm_dataset_pipeline_stream(
         f"{root}/in/documents.parquet",
     )
     stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
+        spark.readStream.schema(d.schema)
         .parquet(f"{root}/in")
-        .filter(F.pmod(F.col("doc_id"), F.lit(LLM_PIPE_BENCH_MOD)) != 0)
+        .filter(~is_bench)
         .select("doc_id", "source", "text")
     )
     counters = (
@@ -3352,14 +3341,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = d.select("source", word_tokens("text").alias("toks"))
     e = toked.select(
         "source",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    word_ngrams(F.col("toks"), CROSSDOC_N),
-                    lambda g: F.xxhash64(g),
-                )
-            )
-        ).alias("g"),
+        F.explode(hashed_gram_set(word_ngrams(F.col("toks"), CROSSDOC_N))).alias("g"),
     )
     srcs = (
         e.groupBy("g")

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
-from ..functions.ngrams import word_ngrams, word_tokens
+from ..functions.ngrams import DECON_N, hashed_gram_set, word_ngrams, word_tokens
 
 
 def _event_schema(ts_type: T.DataType) -> T.StructType:
@@ -387,7 +387,6 @@ def decontaminate_stream(
     bits_broadcast,
     kept_path: str,
     checkpoint: str,
-    n: int = 5,
 ):
     """Streaming ingest decontamination gate: each micro-batch of
     documents is screened against the broadcast Bloom bitset of the
@@ -409,33 +408,30 @@ def decontaminate_stream(
     ``read_epoch_union``."""
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
-        kept = _bloom_clean_docs(batch, bits_broadcast, n).select("doc_id", "text")
+        kept = _bloom_clean_docs(batch, bits_broadcast).select("doc_id", "text")
         kept.write.mode("overwrite").parquet(f"{kept_path}/epoch={epoch_id}")
 
     return _available_now(new_docs, gate, checkpoint)
 
 
-def _bloom_clean_docs(batch: DataFrame, bits_broadcast, n: int) -> DataFrame:
+def _bloom_clean_docs(batch: DataFrame, bits_broadcast) -> DataFrame:
     """The Bloom zero-hit keep filter, factored so ``decontaminate_stream``
     and ``llm_curation_stream`` share it by call, not copy: returns the
-    rows of ``batch`` (all columns) whose word-n-gram set has ZERO
-    might-contain hits against the broadcast bitset.
+    rows of ``batch`` (all columns) whose ``hashed_gram_set`` of word
+    ``DECON_N``-grams has ZERO might-contain hits against the broadcast
+    bitset, which must be built from the same helper.
 
     Inner explode + left join back, NOT explode_outer through the probe:
     Spark evaluates pandas UDFs in a separate ArrowEvalPython node over
     every row regardless of an enclosing when(), so a NULL gram from a
-    sub-n-token doc would reach the UDF. Docs with no grams have nothing
+    doc shorter than ``DECON_N`` tokens would reach the UDF. Docs with no grams have nothing
     to probe and are kept via the left join's coalesce."""
     from ..operators.bloom import bloom_might_contain
 
     toks = word_tokens("text")
     grams = batch.select("doc_id", toks.alias("toks")).select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(word_ngrams(F.col("toks"), n), lambda g: F.xxhash64(g))
-            )
-        ).alias("gram"),
+        F.explode(hashed_gram_set(word_ngrams(F.col("toks"), DECON_N))).alias("gram"),
     )
     hits = (
         grams.filter(bloom_might_contain("gram", bits_broadcast))
@@ -457,7 +453,6 @@ def llm_curation_stream(
     kept_path: str,
     checkpoint: str,
     budget_per_source: int,
-    gram_n: int = 5,
     dsir_model: tuple[dict[str, float], float] | None = None,
 ):
     """The STREAMING LLM-curation capstone: the incremental dual of the
@@ -567,7 +562,7 @@ def llm_curation_stream(
                 # budget window, and the stats rollup each consume ``clean``
                 # — without it the gram explode + ArrowEval Bloom probe chain
                 # re-runs up to three times per epoch.
-                clean = _bloom_clean_docs(deduped, bits_broadcast, gram_n).persist()
+                clean = _bloom_clean_docs(deduped, bits_broadcast).persist()
 
                 spent = read_epoch_union(
                     spark,

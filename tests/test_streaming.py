@@ -900,16 +900,19 @@ def _llm_curation_fixture_rows():
 
 def _llm_curation_bits(spark, bench_sent):
     from mlb_win_predictor_spark.operators.bloom import bloom_build
-    from mlb_win_predictor_spark.functions.ngrams import word_ngrams, word_tokens
+    from mlb_win_predictor_spark.functions.ngrams import (
+        DECON_N,
+        hashed_gram_set,
+        word_ngrams,
+        word_tokens,
+    )
 
     bench = (
         spark.createDataFrame([(bench_sent,)], "text string")
         .select(word_tokens("text").alias("toks"))
         .select(
             F.explode(
-                F.array_distinct(
-                    F.transform(word_ngrams(F.col("toks"), 5), lambda g: F.xxhash64(g))
-                )
+                hashed_gram_set(word_ngrams(F.col("toks"), DECON_N))
             ).alias("gram")
         )
     )
