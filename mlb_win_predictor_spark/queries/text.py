@@ -2757,7 +2757,12 @@ def llm_dataset_pipeline_stream(
     import tempfile
 
     from ..operators.bloom import bloom_build
-    from ..streaming.jobs import llm_curation_stream, read_epoch_union
+    from ..streaming.jobs import (
+        CURATION_STATS,
+        CURATION_STATS_SCHEMA,
+        llm_curation_stream,
+        read_epoch_union,
+    )
 
     d = load_table(spark, sf_dir, "documents")
     is_bench = F.pmod(F.col("doc_id"), F.lit(LLM_PIPE_BENCH_MOD)) == 0
@@ -2797,15 +2802,6 @@ def llm_dataset_pipeline_stream(
         .filter(~is_bench)
         .select("doc_id", "source", "text")
     )
-    counters = (
-        "n_input",
-        "n_quality",
-        "n_dedup",
-        "n_clean",
-        "n_final",
-        "tokens_clean",
-        "tokens_final",
-    )
     try:
         q = llm_curation_stream(
             stream,
@@ -2819,15 +2815,10 @@ def llm_dataset_pipeline_stream(
         ).start()
         q.awaitTermination()
 
-        stats = read_epoch_union(
-            spark,
-            f"{root}/stats",
-            "source string, n_input long, n_quality long, n_dedup long, "
-            "n_clean long, n_final long, tokens_clean long, tokens_final long",
-        )
+        stats = read_epoch_union(spark, f"{root}/stats", CURATION_STATS_SCHEMA)
         rows = (
             stats.groupBy("source")
-            .agg(*[F.sum(c).cast("long").alias(c) for c in counters])
+            .agg(*[F.sum(c).cast("long").alias(c) for c in CURATION_STATS])
             .collect()
         )
     finally:
@@ -2838,9 +2829,7 @@ def llm_dataset_pipeline_stream(
         # bits is never used after this.
         bits.destroy()
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "source string, " + ", ".join(f"{c} long" for c in counters)
-    )
+    return spark.createDataFrame(rows, CURATION_STATS_SCHEMA)
 
 
 def llm_dataset_pipeline_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import shutil
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -445,6 +446,54 @@ def _bloom_clean_docs(batch: DataFrame, bits_broadcast) -> DataFrame:
     )
 
 
+# per-source attrition counters of ``llm_curation_stream``'s stats table,
+# in column order after ``source``
+CURATION_STATS = (
+    "n_input",
+    "n_quality",
+    "n_dedup",
+    "n_clean",
+    "n_final",
+    "tokens_clean",
+    "tokens_final",
+)
+CURATION_STATS_SCHEMA = "source string, " + ", ".join(f"{c} long" for c in CURATION_STATS)
+
+
+def curation_stage_stats(
+    flagged: DataFrame,
+    quality: DataFrame,
+    deduped: DataFrame,
+    clean: DataFrame,
+    selected: DataFrame,
+) -> DataFrame:
+    """One curation epoch's ``CURATION_STATS_SCHEMA`` rows: per source, the
+    doc count of each stage frame and the token sums of ``clean`` and
+    ``selected``. Each frame (with ``source`` and ``n_toks``) is tagged
+    with its counter name, and ONE ``groupBy("source")`` over the union
+    counts every stage. Every stage frame is a subset of ``flagged``, so
+    each source has input rows, and a stage that lost all of a source's
+    docs counts ``0``, not NULL."""
+    stages = [
+        ("n_input", flagged),
+        ("n_quality", quality),
+        ("n_dedup", deduped),
+        ("n_clean", clean),
+        ("n_final", selected),
+    ]
+    tagged = reduce(
+        DataFrame.union,
+        [df.select("source", "n_toks", F.lit(tag).alias("stage")) for tag, df in stages],
+    )
+    at = lambda tag: F.col("stage") == tag  # noqa: E731
+    tokens = lambda tag: F.sum(F.when(at(tag), F.col("n_toks")).otherwise(F.lit(0)))  # noqa: E731
+    return tagged.groupBy("source").agg(
+        *[F.count_if(at(tag)).alias(tag) for tag, _ in stages],
+        tokens("n_clean").cast("long").alias("tokens_clean"),
+        tokens("n_final").cast("long").alias("tokens_final"),
+    )
+
+
 def llm_curation_stream(
     new_docs: DataFrame,
     bits_broadcast,
@@ -509,8 +558,9 @@ def llm_curation_stream(
 
     State lives in three parquet tables, not the streaming engine:
     ``index_path`` (band index of dedup survivors), ``stats_path``
-    (per-epoch per-source attrition counters — its ``tokens_clean`` IS
-    the budget state), ``kept_path`` (the curated corpus). All three are
+    (per-epoch per-source attrition counters, ``CURATION_STATS_SCHEMA``
+    from ``curation_stage_stats`` — its ``tokens_clean`` IS the budget
+    state), ``kept_path`` (the curated corpus). All three are
     per-epoch directories written with overwrite, and epoch N reads
     committed state strictly BELOW N — foreachBatch's at-least-once
     replay reproduces an epoch instead of double-counting it (the
@@ -565,11 +615,7 @@ def llm_curation_stream(
                 clean = _bloom_clean_docs(deduped, bits_broadcast).persist()
 
                 spent = read_epoch_union(
-                    spark,
-                    stats_path,
-                    "source string, n_input long, n_quality long, n_dedup long, "
-                    "n_clean long, n_final long, tokens_clean long, tokens_final long",
-                    below=epoch_id,
+                    spark, stats_path, CURATION_STATS_SCHEMA, below=epoch_id
                 )
                 # cumulative CLEAN tokens, not admitted tokens: the batch cum
                 # charges every clean doc, so the stream must too (see docstring)
@@ -612,51 +658,7 @@ def llm_curation_stream(
                     .persist()
                 )
                 # per-epoch writes, all overwrite — idempotent on replay
-                stats = (
-                    flagged.groupBy("source")
-                    .agg(
-                        F.count(F.lit(1)).cast("long").alias("n_input"),
-                        F.sum(F.col("q").cast("long")).cast("long").alias("n_quality"),
-                    )
-                    .join(
-                        deduped.groupBy("source").agg(
-                            F.count(F.lit(1)).cast("long").alias("n_dedup")
-                        ),
-                        "source",
-                        "left",
-                    )
-                    .join(
-                        clean.groupBy("source").agg(
-                            F.count(F.lit(1)).cast("long").alias("n_clean"),
-                            F.sum("n_toks").cast("long").alias("tokens_clean"),
-                        ),
-                        "source",
-                        "left",
-                    )
-                    .join(
-                        selected.groupBy("source").agg(
-                            F.count(F.lit(1)).cast("long").alias("n_final"),
-                            F.sum("n_toks").cast("long").alias("tokens_final"),
-                        ),
-                        "source",
-                        "left",
-                    )
-                    .select(
-                        "source",
-                        "n_input",
-                        "n_quality",
-                        *[
-                            F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-                            for c in (
-                                "n_dedup",
-                                "n_clean",
-                                "n_final",
-                                "tokens_clean",
-                                "tokens_final",
-                            )
-                        ],
-                    )
-                )
+                stats = curation_stage_stats(flagged, quality, deduped, clean, selected)
                 stats.write.mode("overwrite").parquet(f"{stats_path}/epoch={epoch_id}")
                 selected.write.mode("overwrite").parquet(
                     f"{kept_path}/epoch={epoch_id}"

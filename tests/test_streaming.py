@@ -939,28 +939,55 @@ def _run_llm_curation(spark, src, root, bits, budget=60):
 
 
 def _llm_curation_rollup(spark, root):
-    from mlb_win_predictor_spark.streaming.jobs import read_epoch_union
-
-    stats = read_epoch_union(
-        spark,
-        f"{root}/stats",
-        "source string, n_input long, n_quality long, n_dedup long, "
-        "n_clean long, n_final long, tokens_clean long, tokens_final long",
+    from mlb_win_predictor_spark.streaming.jobs import (
+        CURATION_STATS,
+        CURATION_STATS_SCHEMA,
+        read_epoch_union,
     )
-    cols = [
-        "n_input",
-        "n_quality",
-        "n_dedup",
-        "n_clean",
-        "n_final",
-        "tokens_clean",
-        "tokens_final",
-    ]
+
+    stats = read_epoch_union(spark, f"{root}/stats", CURATION_STATS_SCHEMA)
     return {
-        r.source: tuple(r[c] for c in cols)
+        r.source: tuple(r[c] for c in CURATION_STATS)
         for r in stats.groupBy("source")
-        .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
+        .agg(*[F.sum(c).cast("long").alias(c) for c in CURATION_STATS])
         .collect()
+    }
+
+
+def test_curation_stage_stats_counts_each_stage_and_zero_fills(spark):
+    """The per-epoch stats aggregate on hand-made stage frames: each
+    counter counts its own stage, token sums cover the clean and final
+    stages, and source B, which loses every doc after the quality stage,
+    reads 0 (not NULL) in every later counter. Columns come out in the
+    ``CURATION_STATS_SCHEMA`` order and types."""
+    from mlb_win_predictor_spark.streaming.jobs import (
+        CURATION_STATS_SCHEMA,
+        curation_stage_stats,
+    )
+
+    # token counts are powers of two, so every token sum names its docs
+    flagged = spark.createDataFrame(
+        [(1, "A", 1), (2, "A", 2), (3, "A", 4), (4, "A", 8), (5, "A", 16),
+         (6, "B", 32), (7, "B", 64)],
+        "doc_id long, source string, n_toks long",
+    )
+    stage = lambda *ids: flagged.filter(F.col("doc_id").isin(*ids))  # noqa: E731
+    stats = curation_stage_stats(
+        flagged,
+        quality=stage(1, 2, 3, 4, 6),
+        deduped=stage(1, 2, 3),
+        clean=stage(1, 2),
+        selected=stage(1),
+    )
+
+    expected = spark.createDataFrame([], CURATION_STATS_SCHEMA)
+    assert [(f.name, f.dataType) for f in stats.schema] == [
+        (f.name, f.dataType) for f in expected.schema
+    ]
+    got = {r.source: tuple(r)[1:] for r in stats.collect()}
+    assert got == {
+        "A": (5, 4, 3, 2, 1, 3, 1),
+        "B": (2, 1, 0, 0, 0, 0, 0),
     }
 
 
