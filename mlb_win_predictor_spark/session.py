@@ -16,7 +16,9 @@ Design notes (100 TB posture):
 from __future__ import annotations
 
 import os
+import weakref
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -33,6 +35,7 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _runtime_confs(spark: SparkSession) -> None:
@@ -43,7 +46,7 @@ def _runtime_confs(spark: SparkSession) -> None:
     # rejects; read as long and convert in load_table (truncate ns -> µs,
     # matching DuckDB's cast semantics).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Scan-split sizing (r10): openCostInBytes models opening a file as
+    # Scan-split sizing: openCostInBytes models opening a file as
     # that many bytes of scan work; the 4 MiB default assumes seek-bound
     # spinning storage. Splits are sized max(openCost, input/parallelism)
     # capped at maxPartitionBytes, so on a 32-core box the default pins
@@ -110,7 +113,7 @@ def persistent_rdd_count(spark: SparkSession) -> int:
 
 def release_caches(spark: SparkSession) -> int:
     """Release EVERY cache a finished query left in executor storage —
-    the harness-side half of the cache-lifetime contract (r6 verdict #2).
+    the harness-side half of the cache-lifetime contract.
 
     Several catalog entries persist an intermediate that both internal
     eager jobs and the RETURNED lazy plan read (e.g. the PPJoin prefix
@@ -129,7 +132,7 @@ def release_caches(spark: SparkSession) -> int:
     Returns the number of RDD registrations released so harnesses can
     assert the post-state is empty.
 
-    CONSEQUENCE (ADVICE r7): result DataFrames backed by a
+    CONSEQUENCE: result DataFrames backed by a
     ``localCheckpoint`` (PageRank labels, kNN rankings, BPE
     segmentations) are DEAD after this call — their lineage was
     truncated at the checkpoint, so a later action raises a
@@ -173,10 +176,36 @@ def release_checkpoint(df) -> None:
         pass
 
 
+def _files_signature(spark: SparkSession, path: str) -> tuple[str, tuple]:
+    """Qualified path and (file, length, mtime) of each file under it, on any
+    Hadoop FileSystem. Walks ``listStatus``: ``listFiles`` forks per local file."""
+    p = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    files, todo = [], [p]
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            if st.isDirectory():
+                todo.append(st.getPath())
+            else:
+                files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return fs.makeQualified(p).toString(), tuple(sorted(files))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar parquet scan; Catalyst prunes columns / pushes predicates."""
+    """Columnar parquet scan; Catalyst prunes columns / pushes predicates.
+
+    The resolved schema is kept per live session and qualified path,
+    with the path's files signature. A hit reads with the known schema and
+    runs no Spark job (inference runs a one-task job); any rewritten,
+    added or removed file replaces the entry. ``nanosAsLong``, the one
+    conf that changes the inferred schema, is pinned on every call."""
     _runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    key, files = _files_signature(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(key, (None, None))
+    if hit[0] != files:
+        hit = memo[key] = (files, spark.read.parquet(key).schema)
+    df = spark.read.schema(hit[1]).parquet(key)
     if name == "events":
         from pyspark.sql import functions as F
 
@@ -199,7 +228,7 @@ def input_bytes(df: DataFrame) -> int:
     when the source isn't file-backed (the caller falls back to its
     other guard). The cheap size estimate behind ``fan_out``'s
     ``min_bytes`` gate and the size-gated plan pins (e.g. the
-    ``unigram_logprob_quality`` checkpoint, r12) — a driver-side stat
+    ``unigram_logprob_quality`` checkpoint) — a driver-side stat
     call, no job."""
     try:
         total = 0
@@ -224,24 +253,20 @@ def fan_out(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     explode queries at sf0.1, a net LOSS on light map-only queries —
     apply per query, not in load_table).
 
-    ``min_bytes`` (r8): ALSO skip the repartition while the scan's total
+    ``min_bytes``: ALSO skip the repartition while the scan's total
     input is below this size — for per-row work light enough (token
     split + count) that on a tiny input the repartition's stage barrier
     costs more than the parallelism buys (measured at sf0.1: ~0.3s loss
-    per entry), while a 10× input gains 1.3-3.6× (the r7 verdict's 4.2×
-    scaling cluster). Callers pick the threshold that matches their
-    per-row weight: 0 = always (shingling-grade work), ~2 MiB for
-    tokenize-grade work. Both guards pass trivially at cluster scale."""
+    per entry), while a 10× input gains 1.3-3.6×. Callers pick the
+    threshold that matches their per-row weight: 0 = always
+    (shingling-grade work), ~2 MiB for tokenize-grade work. Both guards
+    pass trivially at cluster scale."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if min_bytes and 0 <= input_bytes(df) < min_bytes:
         return df
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -172,3 +172,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+# Un-gated tests whose call phase runs longer than this are listed at the
+# end of every run, as candidates for SLOW_TESTS. The list is a report,
+# never a failure: on a shared host a hard gate would fail on noise.
+SLOW_REPORT_S = 8.0
+
+
+def pytest_terminal_summary(terminalreporter):
+    slow = []
+    for reports in terminalreporter.stats.values():
+        for r in reports:
+            if getattr(r, "when", None) != "call" or r.duration <= SLOW_REPORT_S:
+                continue
+            path, _, name = r.nodeid.partition("::")
+            module = os.path.basename(path).removesuffix(".py")
+            if name.split("::")[-1].split("[")[0] not in SLOW_TESTS.get(module, ()):
+                slow.append((r.duration, r.nodeid))
+    if slow:
+        terminalreporter.write_sep("-", f"un-gated tests over {SLOW_REPORT_S:.0f} s")
+        for duration, nodeid in sorted(slow, reverse=True):
+            terminalreporter.write_line(f"{duration:6.1f} s  {nodeid}")

@@ -156,6 +156,67 @@ def test_minhash_signatures_are_independent(spark):
     assert same < n * 0.1, f"h0==h1 on {same}/{n} docs — seeds not independent"
 
 
+def _jobs_of(spark, group: str, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted
+    through a job group of its own (no job description, so later SQL
+    executions keep their own)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, None)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_resolves_schema_once(spark):
+    """The first ``load_table`` of a table in a session runs the one-task
+    schema-inference job (none when an earlier test already warmed the
+    memo); a second call reads with the memoized schema and runs no job.
+    The ``events`` timestamp branch still sees the resolved ``ts`` type."""
+    from mlb_win_predictor_spark.session import load_table
+
+    def events():
+        return load_table(spark, SF, "events")
+
+    first, n_first = _jobs_of(spark, "schema_memo_1", events)
+    second, n_second = _jobs_of(spark, "schema_memo_2", events)
+    assert n_first <= 1 and n_second == 0, (n_first, n_second)
+    assert first.schema == second.schema
+    assert dict(second.dtypes)["ts"] == "timestamp"
+
+
+def test_load_table_reads_rewritten_table_fresh(spark, tmp_path):
+    """A rewritten table changes the files signature the schema memo is
+    keyed on, so the next ``load_table`` infers the new schema and reads
+    the new rows: a single file rewritten by pandas with an extra column,
+    then a Spark-written directory overwritten with a changed column
+    type."""
+    import pandas as pd
+
+    from mlb_win_predictor_spark.session import load_table
+
+    sf, path = str(tmp_path), str(tmp_path / "documents.parquet")
+
+    def read():
+        df = load_table(spark, sf, "documents")
+        return df.dtypes, sorted(tuple(r) for r in df.collect())
+
+    pd.DataFrame({"doc_id": [1, 2]}).to_parquet(path, index=False)
+    assert read() == ([("doc_id", "bigint")], [(1,), (2,)])
+    pd.DataFrame({"doc_id": [3], "text": ["c"]}).to_parquet(path, index=False)
+    assert read() == ([("doc_id", "bigint"), ("text", "string")], [(3, "c")])
+
+    spark.createDataFrame([(4, "d")], "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert read() == ([("doc_id", "bigint"), ("text", "string")], [(4, "d")])
+    spark.createDataFrame([("e", "e")], "doc_id string, text string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert read() == ([("doc_id", "string"), ("text", "string")], [("e", "e")])
+
+
 def test_equal_size_corpus_join_stays_sort_merge(spark):
     """r13 (r12 verdict #3): the session default
     ``preferSortMergeJoin=false`` lets the planner pick shuffled-hash
